@@ -23,6 +23,7 @@ from __future__ import annotations
 import math
 import os
 import tempfile
+import threading
 import zipfile
 from collections.abc import Iterator
 from typing import Any
@@ -35,6 +36,7 @@ from .core import Cqf, hash_keys
 from .functions.hashing import fingerprint_bytes, murmur64a_arrow
 
 _SHIPPED: set[int] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def ensure_shipped(spark: Any) -> None:
@@ -44,27 +46,39 @@ def ensure_shipped(spark: Any) -> None:
     Executor python workers unpickle our closures by module reference; if the
     driver wasn't launched from the repo root the import fails.  Zipping the
     package once per SparkContext and ``addPyFile``-ing it makes every
-    aggregation self-contained on any cluster.
+    aggregation self-contained on any cluster.  Safe to call from several
+    threads at once (the concurrent queries of one job do): the check-and-
+    ship runs under a lock, and the zip is written to a temporary file that
+    is renamed into place, so no reader ever sees a half-written archive.
     """
     sc = spark.sparkContext
-    if id(sc) in _SHIPPED:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"cqf_spark_pyfiles_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "cqf_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-    sc.addPyFile(zpath)
-    _SHIPPED.add(id(sc))
+    with _SHIP_LOCK:
+        if id(sc) in _SHIPPED:
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        tmp_dir = tempfile.gettempdir()
+        zpath = os.path.join(tmp_dir, f"cqf_spark_pyfiles_{os.getpid()}.zip")
+        # always (re)written: an archive under this name may be left over
+        # from an earlier process that had the same pid
+        fd, tmp = tempfile.mkstemp(
+            dir=tmp_dir, prefix=".cqf_spark_pyfiles_", suffix=".zip"
+        )
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+                for root, _dirs, files in os.walk(pkg_dir):
+                    for name in files:
+                        if name.endswith(".py"):
+                            full = os.path.join(root, name)
+                            rel = os.path.join(
+                                "cqf_spark", os.path.relpath(full, pkg_dir)
+                            )
+                            zf.write(full, rel)
+            os.replace(tmp, zpath)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+        sc.addPyFile(zpath)
+        _SHIPPED.add(id(sc))
 
 # decoded-sketch cache keyed by blob content, so executor processes decode a
 # broadcast sketch once per python worker instead of once per batch.  The key
@@ -350,8 +364,10 @@ def cqf_aggregate(
 def count_udf(spark: Any, sketch: Cqf):
     """pandas UDF: approximate multiplicity of each key (long).
 
-    qf_count_key_value broadcast to executors; the hash + searchsorted probe
-    is a whole-batch numpy op.
+    qf_count_key_value broadcast to executors.  Each Arrow batch is hashed
+    and probed as a whole: ``Cqf.count_hashes`` sorts the batch's hashes,
+    searches the sketch's decoded sorted hashes with them, and returns the
+    counts in the batch's row order.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType

@@ -67,6 +67,44 @@ def hash_keys(keys: np.ndarray, config: CqfConfig) -> np.ndarray:
     return k & mask
 
 
+def _packed_hashes(
+    keys: np.ndarray, values: np.ndarray | None, config: CqfConfig
+) -> np.ndarray:
+    """Key hashes with the value bits packed below them (src/gqf.c:1925-1926);
+    absent ``values`` pack as 0."""
+    h = hash_keys(keys, config)
+    vb = config.value_bits
+    if vb:
+        vmask = _U64((1 << vb) - 1)
+        v = (
+            np.zeros(h.size, dtype=np.uint64)
+            if values is None
+            else np.ascontiguousarray(values, dtype=np.uint64) & vmask
+        )
+        h = (h << _U64(vb)) | v
+    return h
+
+
+def _aggregate(
+    hashes: np.ndarray, counts: np.ndarray | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted distinct hashes and their summed counts (1 per row when
+    ``counts`` is None).  Every temporary dies on return, so none of them
+    is alive during the layout pass that follows."""
+    h = np.ascontiguousarray(hashes, dtype=np.uint64)
+    if counts is None:
+        hu, cu = np.unique(h, return_counts=True)
+        return hu, cu.astype(np.uint64)
+    c = np.ascontiguousarray(counts)
+    if h.size == 0:
+        return h, c
+    order = np.argsort(h, kind="stable")
+    hs, cs = h[order], c[order]
+    del order
+    starts = np.flatnonzero(np.concatenate(([True], hs[1:] != hs[:-1])))
+    return hs[starts], np.add.reduceat(cs, starts)
+
+
 def unhash_keys(hashes: np.ndarray, config: CqfConfig) -> np.ndarray:
     """Recover keys from INVERTIBLE-mode hashes (src/gqf.c:2327-2341)."""
     if config.hash_mode != HashMode.INVERTIBLE:
@@ -87,8 +125,9 @@ class Cqf:
     """One counting-quotient-filter sketch (single partition's worth).
 
     Content state is the multiset {(hash, count)}; physical state is the
-    canonical block layout derived from it.  All public mutators go through
-    :meth:`_rebuild`, keeping serialization canonical.
+    canonical block layout derived from it.  Batch mutators go through
+    :meth:`_rebuild` and single-key ones through :meth:`_splice`; both
+    produce the canonical layout, keeping serialization canonical.
     """
 
     def __init__(
@@ -135,21 +174,14 @@ class Cqf:
         it so capacity never shrinks) without pinning it the way ``qbits``
         does.
         """
-        h = np.ascontiguousarray(hashes, dtype=np.uint64)
-        if counts is None:
-            hu, cu = np.unique(h, return_counts=True)
-            cu = cu.astype(np.uint64)
-        else:
-            c = np.ascontiguousarray(counts, dtype=np.uint64)
-            order = np.argsort(h, kind="stable")
-            hs, cs = h[order], c[order]
-            boundaries = np.empty(hs.size, dtype=bool)
-            if hs.size:
-                boundaries[0] = True
-                boundaries[1:] = hs[1:] != hs[:-1]
-            starts = np.flatnonzero(boundaries)
-            hu = hs[starts]
-            cu = np.add.reduceat(cs, starts) if hs.size else cs
+        hu, cu = _aggregate(
+            hashes,
+            None if counts is None else np.ascontiguousarray(counts, np.uint64),
+        )
+        # drop the raw input before the layout pass: when the caller handed
+        # over a temporary (from_keys' hashes, merge_many's concatenations)
+        # this frees it
+        del hashes, counts
         if qbits is None:
             qbits = max(config.qbits_for(int(hu.size)), min_qbits or 0)
         while True:
@@ -174,16 +206,10 @@ class Cqf:
     ) -> "Cqf":
         """qf_insert-equivalent bulk build from raw keys (src/gqf.c:1899-1960):
         hash per mode, pack value bits, aggregate, build."""
-        h = hash_keys(keys, config)
-        if config.value_bits:
-            vmask = _U64((1 << config.value_bits) - 1)
-            v = (
-                np.zeros(h.size, dtype=np.uint64)
-                if values is None
-                else np.ascontiguousarray(values, dtype=np.uint64) & vmask
-            )
-            h = (h << _U64(config.value_bits)) | v
-        return cls.from_hashes(config, h, counts, qbits, auto_resize)
+        return cls.from_hashes(
+            config, _packed_hashes(keys, values, config), counts, qbits,
+            auto_resize,
+        )
 
     # ------------------------------------------------------------------ #
     # canonical bulk layout (SURVEY.md §4.3)
@@ -202,7 +228,6 @@ class Cqf:
 
         self.nelts = int(counts.sum())
         self.ndistinct = n
-        self._decoded = None
 
         if n == 0:
             self.noccupied = 0
@@ -211,6 +236,7 @@ class Cqf:
             self.runend_pos = np.empty(0, dtype=np.int64)
             self.offsets = np.zeros(geom.nblocks, dtype=np.uint8)
             self.max_displacement = 0
+            self._decoded = _Decoded(hashes, counts, np.empty(0, dtype=np.int64))
             return
 
         # fast-fail before any layout work: every distinct entry occupies at
@@ -257,10 +283,11 @@ class Cqf:
 
         # physical arrays
         slots = np.zeros(geom.total_slots, dtype=bitpack.slot_dtype(bps))
-        intra = np.arange(flat.size, dtype=np.int64) - np.repeat(
-            np.concatenate(([0], csum[:-1])), run_len
+        slot_of_flat = np.repeat(starts, run_len) + (
+            np.arange(flat.size, dtype=np.int64)
+            - np.repeat(np.concatenate(([0], csum[:-1])), run_len)
         )
-        slots[np.repeat(starts, run_len) + intra] = flat.astype(slots.dtype)
+        slots[slot_of_flat] = flat.astype(slots.dtype)
 
         self.slots = slots
         self.occ_pos = run_quot
@@ -276,6 +303,16 @@ class Cqf:
         spill[valid] = np.maximum(ends[j[valid]] - boundary[valid], 0)
         self.offsets = np.zeros(geom.nblocks, dtype=np.uint8)
         self.offsets[1:] = np.minimum(spill, 255).astype(np.uint8)
+
+        # the content is already decoded: keep it rather than have the
+        # first probe re-derive it from the slots (decode_runs).  A
+        # counter's slot index is the slot of its first flat slot; when
+        # every counter is one slot long the two coincide.
+        if flat.size > n:
+            first = np.cumsum(lengths)
+            first -= lengths
+            slot_of_flat = slot_of_flat.take(first)
+        self._decoded = _Decoded(hashes, counts, slot_of_flat)
 
     # ------------------------------------------------------------------ #
     # decode / iterate (src/gqf.c:2191-2419)
@@ -336,34 +373,44 @@ class Cqf:
     # queries (src/gqf.c:2018-2132)
     # ------------------------------------------------------------------ #
 
-    def _probe_hashes(self, keys: np.ndarray, values: np.ndarray | None) -> np.ndarray:
-        h = hash_keys(keys, self.config)
-        vb = self.config.value_bits
-        if vb:
-            vmask = _U64((1 << vb) - 1)
-            v = (
-                np.zeros(h.size, dtype=np.uint64)
-                if values is None
-                else np.ascontiguousarray(values, dtype=np.uint64) & vmask
-            )
-            h = (h << _U64(vb)) | v
-        return h
+    def _locate(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The one probe kernel.  Per probe hash, in the caller's order: its
+        left insertion index into the decoded hashes, and whether that
+        slot holds it.
+
+        The needles are sorted before the search.  numpy's searchsorted
+        starts each sorted key's search from the previous key's lower
+        bound, and consecutive searches touch neighbouring cache lines,
+        where random-order needles miss cache on nearly every step once
+        the sketch outgrows it.  Only all-distinct needles against a tiny,
+        cache-resident sketch pay more for the sort than the search saves
+        (about 1.3x at 31 keys); repeated needles, or any sketch past the
+        cache, gain several-fold."""
+        d = self._decode()
+        h = np.ascontiguousarray(hashes, dtype=np.uint64)
+        order = np.argsort(h)
+        hs = h[order]
+        pos = np.searchsorted(d.hashes, hs, side="left")
+        found = np.zeros(h.size, dtype=bool)
+        if d.hashes.size:
+            found = d.hashes[np.minimum(pos, d.hashes.size - 1)] == hs
+        idx = np.empty_like(pos)
+        idx[order] = pos
+        hit = np.empty_like(found)
+        hit[order] = found
+        return idx, hit
 
     def count_hashes(self, hashes: np.ndarray) -> np.ndarray:
         """Multiplicity per pre-hashed probe; 0 = definitely absent."""
         d = self._decode()
-        h = np.ascontiguousarray(hashes, dtype=np.uint64)
-        idx = np.searchsorted(d.hashes, h, side="left")
-        out = np.zeros(h.size, dtype=np.uint64)
-        ok = idx < d.hashes.size
-        hit = ok.copy()
-        hit[ok] = d.hashes[idx[ok]] == h[ok]
+        idx, hit = self._locate(hashes)
+        out = np.zeros(idx.size, dtype=np.uint64)
         out[hit] = d.counts[idx[hit]]
         return out
 
     def count(self, keys: np.ndarray, values: np.ndarray | None = None) -> np.ndarray:
         """qf_count_key_value (src/gqf.c:2018-2054), vectorized over probes."""
-        return self.count_hashes(self._probe_hashes(keys, values))
+        return self.count_hashes(_packed_hashes(keys, values, self.config))
 
     def contains(self, keys: np.ndarray) -> np.ndarray:
         """Approximate membership: no false negatives, FP <= 2^-r * load."""
@@ -375,34 +422,31 @@ class Cqf:
         d = self._decode()
         vb = self.config.value_bits
         kh = hash_keys(keys, self.config)
-        lo = kh << _U64(vb)
-        hi = (kh + _U64(1)) << _U64(vb) if vb else lo + _U64(1)
-        a = np.searchsorted(d.hashes, lo, side="left")
-        b = np.searchsorted(d.hashes, hi, side="left")
+        a, hit = self._locate(kh << _U64(vb))
+        if vb:
+            # some value of the key is stored iff the next key's first
+            # position lies past this key's
+            b, _ = self._locate((kh + _U64(1)) << _U64(vb))
+            hit = b > a
         counts = np.zeros(kh.size, dtype=np.uint64)
         values = np.zeros(kh.size, dtype=np.uint64)
-        hit = b > a
-        if hit.any():
-            # first stored value for the key; count of that first entry
-            # (the reference returns the first match's count)
-            first = a[hit]
-            counts[hit] = d.counts[first]
-            if vb:
-                values[hit] = d.hashes[first] & _U64((1 << vb) - 1)
+        # first stored value for the key; count of that first entry
+        # (the reference returns the first match's count)
+        first = a[hit]
+        counts[hit] = d.counts[first]
+        if vb:
+            values[hit] = d.hashes[first] & _U64((1 << vb) - 1)
         return counts, values
 
     def unique_index(self, key: int, value: int = 0) -> int:
         """qf_get_unique_index (src/gqf.c:2095-2132): slot index of the key's
         counter (a perfect-hash-style handle, stable until mutation)."""
-        d = self._decode()
-        h = self._probe_hashes(
-            np.array([key], dtype=np.uint64),
-            np.array([value], dtype=np.uint64),
-        )[0]
-        i = int(np.searchsorted(d.hashes, h, side="left"))
-        if i < d.hashes.size and d.hashes[i] == h:
-            return int(d.slot_index[i])
-        return -1
+        return int(
+            self.unique_indexes(
+                np.array([key], dtype=np.uint64),
+                np.array([value], dtype=np.uint64),
+            )[0]
+        )
 
     def unique_indexes(
         self, keys: np.ndarray, values: np.ndarray | None = None
@@ -412,12 +456,10 @@ class Cqf:
         -1 when absent.  Indexes are unique per present key and stable
         until mutation — the perfect-hash handle contract."""
         d = self._decode()
-        h = self._probe_hashes(np.ascontiguousarray(keys, np.uint64), values)
-        idx = np.searchsorted(d.hashes, h, side="left")
-        out = np.full(h.size, -1, dtype=np.int64)
-        ok = idx < d.hashes.size
-        hit = ok.copy()
-        hit[ok] = d.hashes[idx[ok]] == h[ok]
+        idx, hit = self._locate(
+            _packed_hashes(np.ascontiguousarray(keys, np.uint64), values, self.config)
+        )
+        out = np.full(idx.size, -1, dtype=np.int64)
         out[hit] = d.slot_index[idx[hit]]
         return out
 
@@ -430,7 +472,7 @@ class Cqf:
         run's counters.
         """
         geom = self.geom
-        h = self._probe_hashes(keys, None)
+        h = _packed_hashes(keys, None, self.config)
         bps = geom.bits_per_slot
         q = (h >> _U64(bps)).astype(np.int64)
         rem = h & _U64((1 << bps) - 1)
@@ -464,44 +506,32 @@ class Cqf:
         return out
 
     # ------------------------------------------------------------------ #
-    # mutation (all canonical rebuilds)
+    # mutation: batches rebuild, single keys splice
     #
-    # KNOWN COST-MODEL DEVIATION (documented, deliberate): the reference
-    # mutates in place with an O(cluster-length) amortized slot splice
-    # (insert1/_remove, src/gqf.c:1183-1553), so a single point update on
-    # an N-item filter costs ~O(1).  Here every mutation decodes and
-    # canonically REBUILDS the whole sketch — O(N) per call — because the
-    # canonical layout is what makes serialization merge-order-invariant
-    # (bit-identical bytes regardless of build order), which the
-    # distributed correctness story rests on.  Batch mutations amortize
-    # this: insert/remove with a k-row batch is one O(N + k log k)
-    # rebuild, and the streaming path (streaming.StreamingSketchBuilder's
-    # LSM base+delta) turns continuous point updates into periodic batch
-    # compactions.  What you must NOT do at scale is loop .set_count()/
-    # .remove() one key at a time on a big sketch — that is O(N) per key
-    # where the reference is O(1); push the keys through one batched call
-    # or the LSM builder instead (README "Cost model" section).
+    # Batch mutations (insert/remove with a k-row batch, subtract) decode
+    # and canonically REBUILD the whole sketch: one O(N + k log k) pass,
+    # and the canonical layout is what makes serialization merge-order-
+    # invariant (bit-identical bytes regardless of build order), which the
+    # distributed correctness story rests on.  Single-key updates
+    # (insert1/remove1, and set_count/delete_key_value on a physical copy)
+    # instead splice the affected cluster in place, the reference's
+    # O(cluster) cost model (insert1/_remove, src/gqf.c:1183-1553); see
+    # _splice below.  Its result is byte-identical to the rebuild.  For
+    # throughput, batch the keys or use the streaming LSM builder
+    # (streaming.StreamingSketchBuilder) — README "Cost model" section.
     # ------------------------------------------------------------------ #
 
     def _apply_delta(self, hashes: np.ndarray, deltas: np.ndarray) -> "Cqf":
         d = self._decode()
-        allh = np.concatenate([d.hashes, hashes.astype(np.uint64)])
-        allc = np.concatenate([d.counts.astype(np.int64), deltas])
-        if allh.size == 0:
-            return Cqf(self.config, self.geom.qbits)
-        order = np.argsort(allh, kind="stable")
-        hs, cs = allh[order], allc[order]
-        boundaries = np.empty(hs.size, dtype=bool)
-        boundaries[0] = True
-        boundaries[1:] = hs[1:] != hs[:-1]
-        starts = np.flatnonzero(boundaries)
-        hu = hs[starts]
-        cu = np.maximum(np.add.reduceat(cs, starts), 0)  # clamp (gqf.c:1996)
+        hu, cu = _aggregate(
+            np.concatenate([d.hashes, hashes.astype(np.uint64)]),
+            np.concatenate([d.counts.astype(np.int64), deltas]),
+        )
         return Cqf(
             self.config,
             self.geom.qbits,
             _hashes=hu,
-            _counts=cu.astype(np.uint64),
+            _counts=np.maximum(cu, 0).astype(np.uint64),  # clamp (gqf.c:1996)
         )
 
     # ------------------------------------------------------------------ #
@@ -787,9 +817,10 @@ class Cqf:
         is on — then the filter doubles and retries, qf_insert's retry
         loop (src/gqf.c:1902-1914)."""
         h = int(
-            self._probe_hashes(
+            _packed_hashes(
                 np.array([key], dtype=np.uint64),
                 np.array([value], dtype=np.uint64),
+                self.config,
             )[0]
         )
         self._splice_autoresize(h, int(count))
@@ -818,9 +849,10 @@ class Cqf:
         """In-place single-key remove, clamped at zero (_remove,
         src/gqf.c:1982-1998).  MUTATES this sketch; returns self."""
         h = int(
-            self._probe_hashes(
+            _packed_hashes(
                 np.array([key], dtype=np.uint64),
                 np.array([value], dtype=np.uint64),
+                self.config,
             )[0]
         )
         self._splice(h, -int(count))
@@ -833,7 +865,9 @@ class Cqf:
         values: np.ndarray | None = None,
     ) -> "Cqf":
         """Batch qf_insert (src/gqf.c:1899-1960); returns a new sketch."""
-        h = self._probe_hashes(np.ascontiguousarray(keys, dtype=np.uint64), values)
+        h = _packed_hashes(
+            np.ascontiguousarray(keys, dtype=np.uint64), values, self.config
+        )
         c = (
             np.ones(h.size, dtype=np.int64)
             if counts is None
@@ -848,7 +882,9 @@ class Cqf:
         values: np.ndarray | None = None,
     ) -> "Cqf":
         """Batch qf_remove (src/gqf.c:1982-1998); clamps at zero."""
-        h = self._probe_hashes(np.ascontiguousarray(keys, dtype=np.uint64), values)
+        h = _packed_hashes(
+            np.ascontiguousarray(keys, dtype=np.uint64), values, self.config
+        )
         c = (
             np.ones(h.size, dtype=np.int64)
             if counts is None
@@ -862,8 +898,10 @@ class Cqf:
         Routes through the auto-resize retry (the reference implements
         set_count via qf_insert, which honors qf_set_auto_resize), so
         with the flag on this grows instead of raising NoSpaceError."""
-        h = self._probe_hashes(
-            np.array([key], dtype=np.uint64), np.array([value], dtype=np.uint64)
+        h = _packed_hashes(
+            np.array([key], dtype=np.uint64),
+            np.array([value], dtype=np.uint64),
+            self.config,
         )
         new = self.copy()
         new._splice_autoresize(int(h[0]), None, set_to=int(count))
@@ -953,22 +991,20 @@ class Cqf:
         of equal hashes add.  Associative + commutative, and with the
         canonical layout any merge order serializes to identical bytes."""
         cfg = cls._check_mergeable(sketches)
-        hs = np.concatenate([s._decode().hashes for s in sketches])
-        cs = np.concatenate([s._decode().counts for s in sketches])
-        if qbits is None:
-            # size from the UNION's distinct count (the reference likewise
-            # sizes the merge output by total volume, src/bm.c:681-691),
-            # with the inputs' max qbits as a floor so capacity never
-            # shrinks across a merge.  Seeding with the floor alone made
-            # every large merge crawl through the auto-resize retry loop.
-            return cls.from_hashes(
-                cfg,
-                hs,
-                cs,
-                min_qbits=max(s.geom.qbits for s in sketches),
-                auto_resize=auto_resize,
-            )
-        return cls.from_hashes(cfg, hs, cs, qbits=qbits, auto_resize=auto_resize)
+        # size from the UNION's distinct count (the reference likewise sizes
+        # the merge output by total volume, src/bm.c:681-691), with the
+        # inputs' max qbits as a floor so capacity never shrinks across a
+        # merge.  Seeding with the floor alone made every large merge crawl
+        # through the auto-resize retry loop.  The concatenations are passed
+        # without a name here so from_hashes can free them once aggregated.
+        return cls.from_hashes(
+            cfg,
+            np.concatenate([s._decode().hashes for s in sketches]),
+            np.concatenate([s._decode().counts for s in sketches]),
+            qbits=qbits,
+            min_qbits=max(s.geom.qbits for s in sketches),
+            auto_resize=auto_resize,
+        )
 
     def merge(self, other: "Cqf", qbits: int | None = None) -> "Cqf":
         """qf_merge (src/gqf.c:2432-2474)."""

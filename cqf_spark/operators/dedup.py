@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..aggregator import ensure_shipped
 from ..functions.hashing import (
     murmur64a_bytes,
     murmur64a_concat,
@@ -79,6 +80,8 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig: array<long>[num_perm]) — one vectorized pass per batch;
     a document's shingles never leave the partition."""
+    ensure_shipped(docs.sparkSession)
+
     def sig_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
@@ -487,6 +490,7 @@ def simhash_signatures(
     tokenize+hash pass for the batch, then one 1-D reduceat per bit plane
     (sum of +-1 over a doc > 0  <=>  2*ones > ntok) — no per-doc Python
     and no (n_tokens, 64) 2-D broadcast."""
+    ensure_shipped(docs.sparkSession)
 
     def sims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -587,6 +591,7 @@ def simhash_signatures_wide(
     under two seeds) — option (a) of the scale bound on
     :func:`simhash_pairs`.  Emits (id, sim_lo, sim_hi); same 1-D reduceat
     construction per plane, no 2-D broadcast."""
+    ensure_shipped(docs.sparkSession)
 
     def plane(texts: pd.Series, s: int) -> np.ndarray:
         th, tok_start, ntok = space_token_hashes(texts, s)

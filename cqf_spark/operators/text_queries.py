@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..aggregator import ensure_shipped
 from ..functions.hashing import murmur64a_arrow, space_token_hashes
 
 _STOPWORDS = "the a an and or of to in is it for on with as at by".split()
@@ -278,6 +279,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit content fingerprints per doc: murmur of the utf-8 bytes
     (whole-doc) and the order-sensitive Karp-Rabin rolling hash of the
     token sequence.  Arrow-batched, zero per-row Python."""
+    ensure_shipped(docs.sparkSession)
     import pyarrow as pa
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -351,6 +353,7 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fingerprints_keep(df: DataFrame) -> DataFrame:
     """fingerprints() over (doc_id, variant, text), passing variant+text
     through the Arrow batch."""
+    ensure_shipped(df.sparkSession)
     import pyarrow as pa
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

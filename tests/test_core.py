@@ -2,6 +2,8 @@
 golden-content equality, merge associativity with bit-identical bytes, and
 the published false-positive bound."""
 
+import bisect
+
 import numpy as np
 import pytest
 
@@ -261,3 +263,144 @@ def test_null_keys_dropped_and_probes_safe(spark):
     assert got[1] == (2, True)
     assert got[None] == (0, False)
     assert got[7] == (0, False)
+
+
+# --------------------------------------------------------------------- #
+# the probe kernel and the decode a build keeps
+# --------------------------------------------------------------------- #
+
+def _wire_decode(sk):
+    """The lazily decoded content of the sketch's wire image."""
+    return Cqf.from_bytes(sk.to_bytes())._decode()
+
+
+def _sources(cfg):
+    rng = np.random.default_rng(17)
+    keys = rng.integers(0, 1 << cfg.key_bits, 3000, dtype=np.uint64)
+    # up to 50k per key: many counters span several slots
+    counts = rng.integers(1, 50_000, keys.size, dtype=np.uint64)
+    values = (
+        rng.integers(0, 1 << cfg.value_bits, keys.size, dtype=np.uint64)
+        if cfg.value_bits else None
+    )
+    base = Cqf.from_keys(cfg, keys, counts, values=values)
+    parts = [
+        Cqf.from_keys(cfg, keys[i::3], counts[i::3], qbits=base.geom.qbits)
+        for i in range(3)
+    ]
+    return {
+        "build": lambda: base,
+        "empty": lambda: Cqf.empty(cfg, 8),
+        "merge_many": lambda: Cqf.merge_many(parts),
+        "resized": lambda: base.resized(base.geom.qbits + 1),
+        "canonicalized": lambda: base.canonicalized(),
+        "insert": lambda: base.insert(keys[:500], counts[:500]),
+        "remove": lambda: base.remove(keys[:500], counts[:500] // 2 + 1),
+    }
+
+
+@pytest.mark.parametrize("source", [
+    "build", "empty", "merge_many", "resized", "canonicalized", "insert",
+    "remove",
+])
+@pytest.mark.parametrize("value_bits", [0, 4])
+@pytest.mark.parametrize("mode", list(HashMode))
+def test_seeded_decode_equals_wire_decode(mode, value_bits, source):
+    """A built sketch keeps the decode its layout pass already holds; it
+    must equal, element for element, what decoding its bytes yields."""
+    sk = _sources(_cfg(24, mode=mode, value_bits=value_bits))[source]()
+    assert sk._decoded is not None  # seeded, no decode_runs pass
+    got, want = sk._decoded, _wire_decode(sk)
+    for name in ("hashes", "counts", "slot_index"):
+        a, b = getattr(got, name), getattr(want, name)
+        assert a.dtype == b.dtype, name
+        assert np.array_equal(a, b), name
+
+
+def _python_lookup(stored, column, h, fill):
+    """Plain-Python reference search: column value of ``h``, else fill."""
+    i = bisect.bisect_left(stored, h)
+    return column[i] if i < len(stored) and stored[i] == h else fill
+
+
+def _probe_sets(stored_keys, key_bits):
+    rng = np.random.default_rng(23)
+    top = int(stored_keys.max())
+    misses = np.setdiff1d(
+        rng.integers(0, 1 << key_bits, 2000, dtype=np.uint64), stored_keys
+    )
+    mixed = np.concatenate([stored_keys[::2], misses[:500]])
+    return {
+        "empty": np.empty(0, dtype=np.uint64),
+        "sorted": np.sort(mixed),
+        "reverse_sorted": np.sort(mixed)[::-1].copy(),
+        "duplicate_heavy": rng.choice(stored_keys[:5], 4000),
+        "all_misses": misses,
+        "past_last": np.arange(top + 1, min(top + 300, 1 << key_bits),
+                               dtype=np.uint64),
+    }
+
+
+@pytest.mark.parametrize("probes", [
+    "empty", "sorted", "reverse_sorted", "duplicate_heavy", "all_misses",
+    "past_last",
+])
+@pytest.mark.parametrize("value_bits", [0, 4])
+def test_probe_kernel_matches_navigate_and_python(value_bits, probes):
+    """count, query and unique_indexes agree with the rank/select path
+    and with a plain-Python search, whatever the order of the needles.
+    NONE mode makes a key its own hash, so probe order is hash order."""
+    cfg = _cfg(20, mode=HashMode.NONE, value_bits=value_bits)
+    rng = np.random.default_rng(29)
+    stored_keys = np.unique(rng.integers(0, 1 << 19, 3000, dtype=np.uint64))
+    counts = rng.integers(1, 5000, stored_keys.size, dtype=np.uint64)
+    values = (stored_keys * np.uint64(7)) & np.uint64((1 << value_bits) - 1)
+    sk = Cqf.from_keys(cfg, stored_keys, counts, values=values)
+    keys = _probe_sets(stored_keys, cfg.key_bits)[probes]
+
+    w = _wire_decode(sk)
+    stored = [int(x) for x in w.hashes]
+    vb = value_bits
+    packed = [int(k) << vb for k in keys]  # value 0, as count() probes
+    want_count = [_python_lookup(stored, w.counts.tolist(), h, 0) for h in packed]
+    want_uidx = [_python_lookup(stored, w.slot_index.tolist(), h, -1)
+                 for h in packed]
+    assert sk.count(keys).tolist() == want_count
+    assert sk.count_navigate(keys).tolist() == want_count
+    assert sk.unique_indexes(keys).tolist() == want_uidx
+
+    # qf_query: the first stored entry of each key, with its value
+    want_q = []
+    for k in keys.tolist():
+        i = bisect.bisect_left(stored, k << vb)
+        if i < len(stored) and stored[i] >> vb == k:
+            want_q.append((int(w.counts[i]), stored[i] & ((1 << vb) - 1)))
+        else:
+            want_q.append((0, 0))
+    qc, qv = sk.query(keys)
+    assert list(zip(qc.tolist(), qv.tolist())) == want_q
+
+
+@pytest.mark.parametrize("mutate", ["insert1", "remove1", "insert1_new"])
+def test_splice_invalidates_seeded_decode(mutate):
+    """An in-place splice must drop the decode the build kept: the next
+    probe sees the new count and the new slot indexes."""
+    cfg = _cfg(22)
+    keys = np.arange(1, 2000, dtype=np.uint64)
+    sk = Cqf.from_keys(cfg, keys, np.full(keys.size, 3, np.uint64))
+    probe = np.array([7, 5000], dtype=np.uint64)
+    assert sk.count(probe).tolist() == [3, 0]  # served by the seeded decode
+    if mutate == "insert1":
+        sk.insert1(7, count=40)
+        want = [43, 0]
+    elif mutate == "remove1":
+        sk.remove1(7, count=3)
+        want = [0, 0]
+    else:
+        sk.insert1(5000, count=2)
+        want = [3, 2]
+    assert sk.count(probe).tolist() == want
+    w = _wire_decode(sk)
+    assert np.array_equal(sk._decode().slot_index, w.slot_index)
+    assert np.array_equal(sk.unique_indexes(keys),
+                          Cqf.from_bytes(sk.to_bytes()).unique_indexes(keys))

@@ -2,8 +2,16 @@
 pieces whose queries have no SQL oracle (simhash, lang-id, fingerprints,
 LSH internals)."""
 
+import importlib
+import os
+import sys
+import threading
+import time
+import zipfile
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from cqf_spark.operators.ann import (
@@ -172,3 +180,77 @@ def test_ivf_probes_subset_of_cells(spark):
     out = ivf_topk(df, queries, centroids, k=60, nprobe=1)
     per_q = out.groupBy("query_id").count().collect()
     assert all(r["count"] < 60 for r in per_q)
+
+
+# --------------------------------------------------------------------- #
+# shipping the package to executors
+# --------------------------------------------------------------------- #
+
+@pytest.mark.parametrize("builder", [
+    "dedup.minhash_signatures",
+    "dedup.simhash_signatures",
+    "dedup.simhash_signatures_wide",
+    "text_queries.fingerprints",
+    "text_queries._fingerprints_keep",
+])
+def test_map_in_pandas_builders_ship_the_package(spark, monkeypatch, builder):
+    """Every mapInPandas builder ships cqf_spark first, so a session
+    started outside the repo root can unpickle its closures."""
+    modname, fname = builder.split(".")
+    mod = importlib.import_module(f"cqf_spark.operators.{modname}")
+    calls = []
+    monkeypatch.setattr(mod, "ensure_shipped", calls.append)
+    docs = spark.createDataFrame(
+        [(1, "a", "x y z")], "doc_id long, variant string, text string"
+    )
+    getattr(mod, fname)(docs)
+    assert calls == [spark]
+
+
+def test_ensure_shipped_concurrent_callers_ship_once(monkeypatch, tmp_path):
+    """Concurrent callers on one SparkContext ship exactly once, and the
+    archive they ship is whole."""
+    from cqf_spark import aggregator
+
+    class FakeContext:
+        def __init__(self):
+            self.added = []
+
+        def addPyFile(self, path):
+            time.sleep(0.01)  # a py4j round trip: widen the race window
+            self.added.append(path)
+
+    class FakeSession:
+        sparkContext = FakeContext()
+
+    monkeypatch.setattr(aggregator.tempfile, "gettempdir", lambda: str(tmp_path))
+    sc = FakeSession.sparkContext
+    n = 8
+    barrier = threading.Barrier(n)
+    errors = []
+
+    def call():
+        try:
+            barrier.wait(timeout=30)
+            aggregator.ensure_shipped(FakeSession)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+        aggregator._SHIPPED.discard(id(sc))
+    assert errors == []
+    assert len(sc.added) == 1
+    with zipfile.ZipFile(sc.added[0]) as zf:
+        assert zf.testzip() is None
+        assert "cqf_spark/core.py" in zf.namelist()
+    assert os.listdir(tmp_path) == [os.path.basename(sc.added[0])]

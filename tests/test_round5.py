@@ -1434,9 +1434,12 @@ def test_streaming_int_group_column(spark, tmp_path):
         .start()
     )
     try:
+        # poll the sink instead of calling processAllAvailable(): a rate
+        # source keeps producing rows, so that call can block until some
+        # trigger finds no new data, which on a busy host took 10 minutes
+        # and more, far past this deadline
         deadline = _t.time() + 60
         while _t.time() < deadline:
-            q.processAllAvailable()
             n = spark.sql("select count(*) c from int_grp").collect()[0]["c"]
             if n >= 3:
                 break
