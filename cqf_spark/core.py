@@ -333,15 +333,23 @@ class Cqf:
                     self.occ_pos[1:], self.runend_pos[:-1] + 1
                 )
                 ri, rem, cnt, pos = decode_runs(
-                    self.slots.astype(np.uint64),
+                    self.slots,
                     run_starts,
                     self.runend_pos,
                     self.geom.bits_per_slot,
                 )
-                hashes = (
-                    self.occ_pos[ri].astype(np.uint64)
-                    << _U64(self.geom.bits_per_slot)
-                ) | rem
+                # a corrupt blob can pass the CRC (it covers the bytes, not
+                # the encoding) but not its own header
+                total = int(cnt.sum(dtype=np.uint64))
+                if (rem.size, total) != (self.ndistinct, self.nelts % (1 << 64)):
+                    raise ValueError(
+                        f"corrupt sketch: slots decode to {rem.size} distinct"
+                        f" / {total} total, header says {self.ndistinct} /"
+                        f" {self.nelts}"
+                    )
+                hashes = self.occ_pos.take(ri).view(np.uint64)
+                hashes <<= _U64(self.geom.bits_per_slot)
+                hashes |= rem
                 self._decoded = _Decoded(hashes, cnt, pos)
         return self._decoded
 
@@ -491,9 +499,7 @@ class Cqf:
             prev > 0, self.runend_pos[np.maximum(prev - 1, 0)] + 1, 0
         )
         r_start = np.maximum(r_start, q[oi])
-        ri, rrem, rcnt, _ = decode_runs(
-            self.slots.astype(np.uint64), r_start, r_end, bps
-        )
+        ri, rrem, rcnt, _ = decode_runs(self.slots, r_start, r_end, bps)
         # match probe remainder within its run's decoded counters
         order = np.lexsort((rrem, ri))
         key2 = (ri[order].astype(np.uint64) << _U64(bps)) | rrem[order]
@@ -584,7 +590,7 @@ class Cqf:
             re = int(re_old[j])
             # decode only the run's slice — never copy the whole array
             _, rems, cnts, _ = decode_runs(
-                self.slots[rs : re + 1].astype(np.uint64),
+                self.slots[rs : re + 1],
                 np.array([0], dtype=np.int64),
                 np.array([re - rs], dtype=np.int64),
                 bps,
@@ -1109,7 +1115,15 @@ class Cqf:
 
     @property
     def total_size_in_bytes(self) -> int:
-        return len(self.to_bytes())
+        """``len(self.to_bytes())``, from the geometry alone: header,
+        offsets, occupieds and runends words, packed slots, CRC."""
+        geom = self.geom
+        return (
+            _HEADER.size
+            + 17 * geom.nblocks
+            + (geom.total_slots * geom.bits_per_slot + 7) // 8
+            + 4
+        )
 
     # ------------------------------------------------------------------ #
     # serialization (src/gqf_file.c:264-349 analog; columnar layout)
@@ -1135,9 +1149,7 @@ class Cqf:
             self.offsets.tobytes()
             + occ_words.tobytes()
             + re_words.tobytes()
-            + bitpack.pack_slots(
-                self.slots.astype(np.uint64), geom.bits_per_slot
-            )
+            + bitpack.pack_slots(self.slots, geom.bits_per_slot)
         )
         return header + body + struct.pack("<I", zlib.crc32(header + body))
 
@@ -1244,7 +1256,7 @@ class Cqf:
             .view(np.uint8)
             .reshape(geom.nblocks, 8)
         )
-        packed = bitpack.pack_slots(self.slots.astype(np.uint64), bps)
+        packed = bitpack.pack_slots(self.slots, bps)
         blocks[:, 17:] = np.frombuffer(packed, dtype=np.uint8).reshape(
             geom.nblocks, 8 * bps
         )

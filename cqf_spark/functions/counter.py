@@ -17,6 +17,24 @@ ascending, so a slot *smaller* than the current remainder must be a counter
 digit.  ``encode_counter`` mirrors src/gqf.c:1037-1093 and
 ``decode_counter`` src/gqf.c:1097-1167 exactly; the vectorized variants
 process whole batches with no per-row Python.
+
+Almost every counter at <=95% load is a count-1 counter, i.e. one slot
+holding its remainder, and a run whose slots strictly ascend holds only
+those: every multi-slot counter repeats its remainder or drops below it.
+So the batch codec pays per-counter work only where a counter needs more
+than one slot:
+
+* ``encode_counters`` writes each remainder at its start and runs the
+  digit encoder (``_encode_multi``) on the ``counts > 1`` subset only,
+  scattering its slot sequences into place.
+* ``decode_runs`` gathers every run's slots in one pass and reads each
+  slot as a count-1 counter.  Only runs holding a non-ascent go through
+  the cursor decoder (``_decode_cursor``), on a compact copy of their
+  slots; its counts replace those runs' slots.  Output is in run order.
+  The cursor decoder keeps its scalar path for few, long runs: a NONE-mode
+  run of multi-slot counters (e.g. 20,000 count-5 counters) is not
+  ascending, and walks ~10x faster through ``decode_counter`` than through
+  the one-counter-per-iteration vectorized loop.
 """
 
 from __future__ import annotations
@@ -132,16 +150,41 @@ def encode_counters(
 
     Returns ``(flat_slots, lengths)`` where ``flat_slots`` is the
     concatenation of each pair's slot sequence and ``lengths[i]`` its length.
-    Pure array ops; the only loop is over digit positions (O(log count)).
+    A count-1 counter is its own remainder, so every remainder is written at
+    its start and only the ``counts > 1`` subset goes through the digit
+    encoder, whose slot sequences are then scattered into place.
     """
     rems = np.ascontiguousarray(remainders, dtype=np.uint64)
     cnts = np.ascontiguousarray(counts, dtype=np.uint64)
     n = rems.size
+    lengths = np.ones(n, dtype=np.int64)
     if n == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=np.uint64), lengths
     if (cnts == 0).any():
         raise ValueError("counts must be >= 1")
+    multi = np.flatnonzero(cnts > 1)
+    if multi.size == 0:
+        return rems.copy(), lengths
 
+    sub_flat, sub_len = _encode_multi(rems[multi], cnts[multi], bits_per_slot)
+    lengths[multi] = sub_len
+    starts = np.cumsum(lengths)
+    flat = np.empty(int(starts[-1]), dtype=np.uint64)
+    starts -= lengths
+    flat[starts] = rems
+    sub_starts = np.cumsum(sub_len) - sub_len
+    dst = np.repeat(starts[multi] - sub_starts, sub_len)
+    dst += np.arange(sub_flat.size, dtype=np.int64)
+    flat[dst] = sub_flat
+    return flat, lengths
+
+
+def _encode_multi(
+    rems: np.ndarray, cnts: np.ndarray, bits_per_slot: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Digit encoder for counts >= 2, as ``encode_counters`` returns it.
+    Pure array ops; the only loop is over digit positions (O(log count))."""
+    n = rems.size
     full = _U64((1 << bits_per_slot) - 1)
     big = cnts > 3  # needs the positional digit encoding
     rpos = rems > 0
@@ -165,8 +208,7 @@ def encode_counters(
     need_sep = big & rpos & (msd >= rems)  # leading 0 escape (gqf.c:1087-1088)
 
     # --- lengths ----------------------------------------------------------
-    lengths = np.ones(n, dtype=np.int64)
-    lengths[cnts == 2] = 2
+    lengths = np.full(n, 2, dtype=np.int64)
     lengths[cnts == 3] = 3
     lengths[big] = np.where(rpos, 2 + ndig + need_sep, 3 + ndig)[big]
 
@@ -175,10 +217,7 @@ def encode_counters(
     starts = ends - lengths
     flat = np.zeros(int(ends[-1]), dtype=np.uint64)
     flat[starts] = rems          # leading slot is the remainder in all cases
-    flat[ends - 1] = rems        # trailing slot likewise
-    two = cnts == 2
-    if two.any():
-        flat[starts[two]] = rems[two]  # 'x x' (both already rem; keep explicit)
+    flat[ends - 1] = rems        # trailing slot likewise ('x x' for count 2)
     # count==3, rem>0 -> x 0 x : middle zero already zero-initialized.
     # big, rem==0 -> 0 c..c 0 0 : ends-2 already zero.
     # digits: j-th least-significant digit sits at ends-2-j (rem>0) or
@@ -192,14 +231,6 @@ def encode_counters(
     return flat, lengths
 
 
-def counter_lengths(
-    remainders: np.ndarray, counts: np.ndarray, bits_per_slot: int
-) -> np.ndarray:
-    """Encoding length per (remainder, count) pair without materializing."""
-    _, lengths = encode_counters(remainders, counts, bits_per_slot)
-    return lengths
-
-
 # ---------------------------------------------------------------------------
 # Vectorized run decoder
 # ---------------------------------------------------------------------------
@@ -209,20 +240,24 @@ def decode_runs(
     run_starts: np.ndarray,
     run_ends: np.ndarray,
     bits_per_slot: int,
-    max_entries: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode every counter of every run, vectorized across runs.
+    """Decode every counter of every run.
 
-    One cursor per run advances through decode_counter steps; the outer loop
-    runs max-counters-per-run times and the inner digit scan
-    max-digits-per-counter times — both tiny at <=95% load — while each
-    iteration is a whole-array numpy op (no per-row Python).
+    A run whose slots strictly ascend holds only count-1 counters (every
+    multi-slot counter repeats its remainder or drops below it), so one
+    gather of all runs' slots decodes those runs outright: remainder =
+    slot, count 1.  Only runs with a non-ascent go through the cursor
+    decoder (``_decode_cursor``), on a compact copy of just their slots.
 
-    Returns ``(run_index, remainder, count, counter_start_slot)`` arrays, in
-    slot order (i.e. ascending hash order within and across runs when the
-    runs come from a CQF — the iterator order of src/gqf.c:2191-2348).
+    ``slots`` may be any unsigned dtype.  Runs may repeat or overlap (one
+    per probe in ``Cqf.count_navigate``).  Returns ``(run_index, remainder,
+    count, counter_start_slot)`` arrays in run order, counters in slot
+    order within a run; for disjoint ascending runs (a CQF's own, as
+    ``Cqf._decode`` and ``Cqf._splice`` pass them) that is slot order,
+    i.e. ascending hash order — the iterator order of
+    src/gqf.c:2191-2348.
     """
-    slots = np.ascontiguousarray(slots, dtype=np.uint64)
+    slots = np.asarray(slots)
     run_starts = np.ascontiguousarray(run_starts, dtype=np.int64)
     run_ends = np.ascontiguousarray(run_ends, dtype=np.int64)
     nruns = run_starts.size
@@ -230,47 +265,94 @@ def decode_runs(
         e64 = np.empty(0, dtype=np.uint64)
         e = np.empty(0, dtype=np.int64)
         return e, e64, e64, e
+    lens = run_ends - run_starts + 1
+    if (lens < 1).any():
+        raise ValueError("run ends before it starts — corrupt sketch?")
 
-    # r6 fast path for FEW, LONG runs (e.g. NONE-mode identity hashing
-    # packs dense keys into a handful of runs): the vectorized loop below
-    # decodes ONE counter per alive run per iteration, so its whole-array
-    # numpy overhead is paid per counter once few runs remain — measured
-    # ~30 us/counter, i.e. ~1 s for a single 20k-counter run.  When the
-    # average run is long, a scalar walk with the spec-mirror
-    # ``decode_counter`` (bit-exact by definition — it IS the reference
-    # mirror the vectorized path is tested against) is ~10x faster.  The
-    # many-short-runs case (every hashed mode at <=95% load) keeps the
-    # vectorized path, where hundreds of runs amortize each iteration.
-    total_run_slots = int((run_ends - run_starts + 1).sum())
-    if total_run_slots > 64 * nruns:
+    # gather every run's slots: run r occupies [offs[r], offs[r] + lens[r])
+    ends = np.cumsum(lens)
+    offs = ends - lens
+    pos = np.repeat(run_starts - offs, lens)
+    pos += np.arange(int(ends[-1]), dtype=np.int64)
+    v = slots[pos]
+
+    # read every slot as a count-1 counter
+    run_index = np.repeat(np.arange(nruns, dtype=np.int64), lens)
+    count = np.ones(v.size, dtype=np.uint64)
+
+    # runs holding a non-ascent need the cursor decoder
+    non_ascent = np.empty(v.size, dtype=bool)
+    np.less_equal(v[1:], v[:-1], out=non_ascent[1:])
+    non_ascent[offs] = False  # a run's first slot vs the previous run's last
+    cursor_runs = np.flatnonzero(np.logical_or.reduceat(non_ascent, offs))
+    if cursor_runs.size == 0:
+        return run_index, v.astype(np.uint64), count, pos
+
+    # The cursor decoder sees a compact copy of just those runs.  A
+    # counter's remainder is its first slot, so its result only sets the
+    # count there and drops the counter's other slots; what is left is
+    # still in gather order, i.e. run order, wherever the runs lie.
+    sub_lens = lens[cursor_runs]
+    sub_ends = np.cumsum(sub_lens)
+    sub_offs = sub_ends - sub_lens
+    elem = np.repeat(offs[cursor_runs] - sub_offs, sub_lens)
+    elem += np.arange(int(sub_ends[-1]), dtype=np.int64)
+    _, _, c_cnt, c_at = _decode_cursor(
+        v[elem].astype(np.uint64), sub_offs, sub_ends - 1, bits_per_slot
+    )
+    first = elem[c_at]
+    count[first] = c_cnt
+    keep = np.ones(v.size, dtype=bool)
+    keep[elem] = False
+    keep[first] = True
+    # one array at a time, so each full-size one is freed before the next
+    run_index = run_index[keep]
+    count = count[keep]
+    pos = pos[keep]
+    return run_index, v[keep].astype(np.uint64), count, pos
+
+
+def _decode_cursor(
+    slots: np.ndarray,
+    run_starts: np.ndarray,
+    run_ends: np.ndarray,
+    bits_per_slot: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Cursor decoder for the runs ``decode_runs`` cannot gather: those
+    holding multi-slot counters.  ``slots`` is uint64; returns the same
+    arrays as ``decode_runs``, in slot order, which is run order for the
+    disjoint ascending runs ``decode_runs`` passes.
+
+    One cursor per run advances through decode_counter steps; the outer loop
+    runs max-counters-per-run times and the inner digit scan
+    max-digits-per-counter times — both tiny at <=95% load — while each
+    iteration is a whole-array numpy op (no per-row Python).
+    """
+    nruns = run_starts.size
+    # FEW, LONG runs (NONE-mode identity hashing packs dense keys into a
+    # handful of runs): the vectorized loop below decodes ONE counter per
+    # alive run per iteration, so its whole-array numpy overhead is paid
+    # per counter once few runs remain — measured ~30 us/counter, i.e.
+    # ~1 s for a single 20k-counter run.  When the average run is long, a
+    # scalar walk with the spec-mirror ``decode_counter`` (bit-exact by
+    # definition) is ~10x faster.  Runs of count-1 counters never get
+    # here (the gather in decode_runs takes them); runs of multi-slot
+    # counters still do, e.g. 20,000 count-5 counters in one NONE-mode run.
+    if slots.size > 64 * nruns:
+        seg = slots.tolist()  # decode_counter reads only inside the run
         s_run: list[int] = []
         s_rem: list[int] = []
         s_cnt: list[int] = []
         s_pos: list[int] = []
         for ri in range(nruns):
-            s0, rend = int(run_starts[ri]), int(run_ends[ri])
-            # box only this run's span (+1 slot of lookahead — the scalar
-            # decoder reads at most slots[runend+1]), never the whole
-            # backing array: a sparse layout's slots array can be orders
-            # of magnitude larger than its occupied spans
-            seg = slots[s0 : min(rend + 2, slots.size)].tolist()
-            if rend + 2 > slots.size:
-                seg.append(0)  # clamp exactly like the vectorized path
-            rel_end = rend - s0
-            i = 0
-            while i <= rel_end:
-                rem, cnt, last = decode_counter(
-                    seg, i, rel_end, bits_per_slot
-                )
+            i, rend = int(run_starts[ri]), int(run_ends[ri])
+            while i <= rend:
+                rem, cnt, last = decode_counter(seg, i, rend, bits_per_slot)
                 s_run.append(ri)
                 s_rem.append(rem)
                 s_cnt.append(cnt)
-                s_pos.append(s0 + i)
+                s_pos.append(i)
                 i = last + 1
-            if max_entries is not None and len(s_rem) > max_entries:
-                raise RuntimeError(
-                    "decode_runs exceeded max_entries — corrupt sketch?"
-                )
         return (
             np.asarray(s_run, dtype=np.int64),
             np.asarray(s_rem, dtype=np.uint64),
@@ -385,8 +467,6 @@ def decode_runs(
 
         cursor[idx] = last + 1
         alive[idx] = cursor[idx] <= run_ends[idx]
-        if max_entries is not None and sum(a.size for a in out_rem) > max_entries:
-            raise RuntimeError("decode_runs exceeded max_entries — corrupt sketch?")
 
     run_index = np.concatenate(out_run)
     remainder = np.concatenate(out_rem)

@@ -404,3 +404,41 @@ def test_splice_invalidates_seeded_decode(mutate):
     assert np.array_equal(sk._decode().slot_index, w.slot_index)
     assert np.array_equal(sk.unique_indexes(keys),
                           Cqf.from_bytes(sk.to_bytes()).unique_indexes(keys))
+
+
+@pytest.mark.parametrize("value_bits", [0, 4])
+@pytest.mark.parametrize("key_bits", [20, 28])  # bps 8/12 and 16/20 at q=12
+@pytest.mark.parametrize("mode", list(HashMode))
+def test_total_size_in_bytes_is_wire_length(mode, key_bits, value_bits):
+    cfg = _cfg(key_bits, mode=mode, value_bits=value_bits)
+    rng = np.random.default_rng(31)
+    keys = rng.integers(0, 1 << key_bits, 2000, dtype=np.uint64)
+    values = (
+        rng.integers(0, 1 << value_bits, keys.size, dtype=np.uint64)
+        if value_bits else None
+    )
+    for sk in (
+        Cqf.empty(cfg, 12),
+        Cqf.from_keys(cfg, keys, rng.integers(1, 9, keys.size, dtype=np.uint64),
+                      values=values, qbits=12),
+    ):
+        assert sk.total_size_in_bytes == len(sk.to_bytes())
+
+
+def test_corrupt_counter_encoding_fails_loudly():
+    """A blob whose CRC matches but whose slots no longer decode to its
+    header (two count-1 counters turned into one count-2 counter) raises
+    on the first probe instead of answering from the corrupt content."""
+    cfg = _cfg(24)
+    keys = np.arange(1, 3000, dtype=np.uint64)
+    sk = Cqf.from_keys(cfg, keys)
+    bad = Cqf.from_bytes(sk.to_bytes())
+    starts = np.maximum(bad.occ_pos[1:], bad.runend_pos[:-1] + 1)
+    run = 1 + int(np.flatnonzero(bad.runend_pos[1:] > starts)[0])
+    k = int(starts[run - 1]) + 1  # second slot of a run of count-1 counters
+    assert bad.slots[k] > bad.slots[k - 1]
+    bad.slots[k] = bad.slots[k - 1]
+    blob = bad.to_bytes()  # same header, fresh CRC
+    assert Cqf.from_bytes(sk.to_bytes()).count(keys[:5]).tolist() == [1] * 5
+    with pytest.raises(ValueError, match="corrupt sketch"):
+        Cqf.from_bytes(blob).count(keys[:5])
