@@ -1,21 +1,27 @@
 """Distributed CQF aggregation — the Spark-native realization of the
 reference's insert/merge lifecycle (SURVEY.md §3).
 
-Pipeline shape (all Arrow-batched, no per-row Python):
+Pipeline shape of ``cqf_aggregate`` (all Arrow-batched, no per-row Python):
 
-    df.select(key)                       # Catalyst prunes/pushes down
-      -> mapInPandas(build)              # one numpy CQF per partition
-                                         #   = partial aggregation
-      -> RDD[bytes].treeReduce(merge)    # log4(P) merge rounds
-                                         #   = qf_multi_merge (gqf.c:2479)
+    df.groupBy(key[, value]).count()     # JVM pre-aggregation: map-side
+                                         #   partial agg + one exchange of
+                                         #   (key, count) rows
+      -> mapInArrow(build)               # one numpy CQF per partition,
+                                         #   hashed off the Arrow buffers
+      -> applyInPandas merge rounds      # only while > fan_in blobs remain
+         or collect                      #   = qf_multi_merge (gqf.c:2479)
       -> broadcast sketch                # qf_serialize bytes on the wire
       -> pandas_udf probes               # qf_count_key_value, vectorized
 
-Only sketch blobs cross process/node boundaries after extraction; raw keys
-never shuffle.  Per-partition locks are unnecessary (single-writer
+``build_sketches`` + ``tree_merge`` is the same chain without the JVM
+pre-aggregation: one partial sketch per input partition.  After the
+exchange only (key, count) rows and sketch blobs cross process/node
+boundaries.  Per-partition locks are unnecessary (single-writer
 partitions replace the reference's region spin-locks, src/gqf.c:146-244);
 per-partition metrics replace the per-CPU partitioned counters
-(src/partitioned_counter.c).
+(src/partitioned_counter.c).  Nothing here runs a Spark job while
+planning: partition counts are read off the physical plan
+(:func:`partition_bound`), so each stage runs once, inside the collect.
 """
 
 from __future__ import annotations
@@ -151,15 +157,81 @@ def hash_arrow(arr: Any, config: CqfConfig) -> np.ndarray:
     return hash_keys(np_arr.astype(np.int64).view(np.uint64), config)
 
 
+# Plan nodes whose partitions only exist once a job has run: asking
+# ``df.rdd`` for their partition count executes the plan up to them (AQE
+# materializes every query stage, a cached relation builds its buffers).
+# AQE wraps any plan that needs an exchange, a subquery or a cached scan.
+_STAGED_NODES = frozenset(
+    {"AdaptiveSparkPlanExec", "Exchange", "InMemoryTableScanExec"}
+)
+
+
+def _node_classes(node: Any) -> set[str]:
+    names = set()
+    cls = node.getClass()
+    while cls is not None:
+        names.add(cls.getSimpleName())
+        cls = cls.getSuperclass()
+    return names
+
+
+def _exchange_partitions(df: Any) -> list[int] | None:
+    """Walk ``df``'s physical plan node classes through py4j, descending
+    into AQE's input plan and into cached relations' plans.  Planning only:
+    nothing executes.  ``None`` when no node needs a job to exist (scans
+    and narrow operators only, where ``df.rdd`` is a file listing);
+    otherwise the partition counts of the exchanges already in the plan
+    (an explicit repartition; AQE inserts the others later)."""
+    staged = False
+    counts: list[int] = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        classes = _node_classes(node)
+        if classes & _STAGED_NODES:
+            staged = True
+        if "Exchange" in classes:
+            counts.append(int(node.outputPartitioning().numPartitions()))
+        if "AdaptiveSparkPlanExec" in classes:
+            stack.append(node.inputPlan())
+        elif "InMemoryTableScanExec" in classes:
+            stack.append(node.relation().cachedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts if staged else None
+
+
+def partition_bound(df: Any) -> int:
+    """Upper bound on ``df``'s partition count, without running a job.
+
+    Exact for scan-only plans (``df.rdd`` lists files, nothing runs).  A
+    plan that holds an exchange or a cached scan would run to answer, so
+    it is bounded instead by the session's shuffle partition count (or an
+    explicit repartition's, if larger): AQE only coalesces.  A cached scan
+    of more splits than that, or a union of shuffled frames, can exceed
+    the bound."""
+    counts = _exchange_partitions(df)
+    if counts is None:
+        return df.rdd.getNumPartitions()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return max([int(conf.numShufflePartitions())] + counts)
+
+
 def ensure_parallelism(df: Any, min_parts: int | None = None) -> Any:
-    """Repartition only when the source has fewer splits than the cluster has
-    cores (small-file inputs).  At scale, parquet inputs already have
+    """Repartition only bare scans that have fewer splits than the cluster
+    has cores (small-file inputs).  At scale, parquet inputs already have
     thousands of splits and this is a metadata-only no-op — no shuffle is
     added to the 100 TB path.  The repartition happens on the *pruned*
-    columns, so at most (key, count) longs move."""
-    spark = df.sparkSession
+    columns, so at most (key, count) longs move.
+
+    Inputs whose plan holds an exchange or a cached scan are left alone:
+    their partitioning is the shuffle's (or the cache's), and counting
+    their partitions would run the plan once as a job of its own before
+    the caller runs it again."""
+    if _exchange_partitions(df) is not None:
+        return df
     if min_parts is None:
-        min_parts = spark.sparkContext.defaultParallelism
+        min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
@@ -296,7 +368,7 @@ def merge_group_key(n_groups: int) -> Any:
 
 
 def tree_merge(sketch_df: Any, fan_in: int = 64,
-               n_blobs: int | None = None) -> Cqf:
+               n_blobs: int | None = None, empty: Cqf | None = None) -> Cqf:
     """UDAF *merge* phase: k-way merge of sketch blobs (qf_multi_merge
     semantics, src/gqf.c:2479-2544).
 
@@ -312,17 +384,20 @@ def tree_merge(sketch_df: Any, fan_in: int = 64,
     ``treeReduce`` at P=32 (shuffle-round overhead dwarfs the numpy merge).
     At 100 TB scale (tens of thousands of partitions) each round reduces the
     blob count by ``fan_in``x, so 100k partitions -> 2 executor rounds.
+    An input with no blobs merges to ``empty``, or raises ``ValueError``
+    when ``empty`` is not given.
     """
-    from pyspark.sql import functions as F
-
     df = sketch_df.select("sketch")
-    # blob count gates the executor rounds.  getNumPartitions is EXACT
-    # for build_sketches output (one blob row per input partition, no
-    # extra job) but wrong for re-read frames (a parquet scan's split
+    # blob count gates the executor rounds.  partition_bound is exact for
+    # build_sketches over a scan (one blob row per input partition) and an
+    # upper bound over an exchange, read off the plan either way: counting
+    # through df.rdd would run the exchange as a job of its own before the
+    # collect, and again inside it once a merge round wraps the frame in a
+    # new plan.  It is wrong for re-read frames (a parquet scan's split
     # count tracks file sizes, not rows) — those callers pass n_blobs
     # explicitly (checkpoint.py) so 100k compacted blobs still take the
     # executor rounds instead of a driver-side collect.
-    n = n_blobs if n_blobs is not None else df.rdd.getNumPartitions()
+    n = n_blobs if n_blobs is not None else partition_bound(df)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sks = [Cqf.from_bytes(bytes(b)) for b in pdf["sketch"]]
@@ -339,7 +414,9 @@ def tree_merge(sketch_df: Any, fan_in: int = 64,
 
     blobs = [bytes(r[0]) for r in df.collect()]
     if not blobs:
-        raise ValueError("no sketches to merge (empty input)")
+        if empty is None:
+            raise ValueError("no sketches to merge (empty input)")
+        return empty
     return Cqf.merge_many([Cqf.from_bytes(b) for b in blobs])
 
 
@@ -351,9 +428,31 @@ def cqf_aggregate(
     qbits_hint: int | None = None,
     value_col: str | None = None,
 ) -> Cqf:
-    """Full build: partial per-partition sketches + tree merge -> one Cqf."""
+    """Full build: partial per-partition sketches + tree merge -> one Cqf.
+
+    Without ``count_col`` the raw stream is first counted in the JVM,
+    ``groupBy(key[, value]).count()``: map-side partial aggregation, one
+    exchange of (key, count) rows, and the Python build sees one row per
+    distinct key instead of every row.
+    ``Cqf.from_hashes(counts=...)`` aggregates identically, so the sketch
+    bytes are those of the raw-stream build.  The cost: an all-distinct
+    stream pays that exchange for nothing (on 4 cores, 4M distinct longs
+    took 2.5-3.2 s without it and 3.7-4.3 s with it).
+    ``tree_merge(build_sketches(df, ...))`` is the raw path for callers
+    whose keys are known to be distinct.  An empty input (or one whose
+    keys are all null) gives the empty sketch.
+    """
+    from pyspark.sql import functions as F
+
+    if count_col is None:
+        grain = [key_col] + ([value_col] if value_col else [])
+        df = df.groupBy(*grain).agg(F.count(F.lit(1)).alias("__cnt"))
+        count_col = "__cnt"
     return tree_merge(
-        build_sketches(df, key_col, config, count_col, qbits_hint, value_col)
+        build_sketches(df, key_col, config, count_col, qbits_hint, value_col),
+        empty=Cqf.empty(
+            config, config.qbits_for(0) if qbits_hint is None else qbits_hint
+        ),
     )
 
 

@@ -72,22 +72,19 @@ def dsir_log_weights(
     config = config or CqfConfig(key_bits=48, seed=37)
     spark = raw.sparkSession
 
-    # r6: both gram CQFs build from exact JVM pre-aggregated (gram, count)
-    # rows (guide §2.3 — natural-language gram streams are Zipfian, so the
-    # map-side combine collapses the head mass before anything reaches
-    # Python); sketches are bit-identical to the raw-stream builds
-    t_grams = (
-        target.select(F.explode(ngrams_expr(n, text_col)).alias("_g"))
-        .groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+    # cqf_aggregate counts each gram stream in the JVM before the build
+    # (natural-language gram streams are Zipfian, so the map-side combine
+    # collapses the head mass before anything reaches Python)
+    sk_t = cqf_aggregate(
+        target.select(F.explode(ngrams_expr(n, text_col)).alias("_g")),
+        "_g",
+        config,
     )
-    r_grams = (
-        raw.select(F.explode(ngrams_expr(n, text_col)).alias("_g"))
-        .groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+    sk_r = cqf_aggregate(
+        raw.select(F.explode(ngrams_expr(n, text_col)).alias("_g")),
+        "_g",
+        config,
     )
-    sk_t = cqf_aggregate(t_grams, "_g", config, count_col="__cnt")
-    sk_r = cqf_aggregate(r_grams, "_g", config, count_col="__cnt")
 
     # normalization scalars read off the sketches' own metadata — exact
     # within the same 48-bit-collision sliver as the counts themselves

@@ -82,11 +82,9 @@ def ngram_lm_scores(
             "_c", F.coalesce("_c", F.lit(0))
         )
     else:
-        # r6: exact (gram, count) pre-aggregation before the build
-        # (guide §2.3) — bit-identical LM sketch, Python sees one row per
-        # distinct gram instead of the reference's whole gram stream
-        pre = grams.groupBy("_g").agg(F.count(F.lit(1)).alias("__cnt"))
-        sketch = cqf_aggregate(pre, "_g", config, count_col="__cnt")
+        # cqf_aggregate counts the grams in the JVM first: Python sees one
+        # row per distinct gram instead of the reference's whole gram stream
+        sketch = cqf_aggregate(grams, "_g", config)
         counted = doc_grams.withColumn(
             "_c", count_udf(spark, sketch)(F.col("_g"))
         )

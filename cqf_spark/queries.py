@@ -47,24 +47,20 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def counted_keys(
     df: DataFrame, key_col: str, persist: bool = True
 ) -> DataFrame:
-    """Exact (key, __cnt) pre-aggregation, persisted — the guide §2.3
-    "aggregate before you shuffle" step in front of a sketch build.
+    """Exact (key, __cnt) pre-aggregation, persisted, for queries that
+    reuse the counted frame as their probe set.
 
-    ``groupBy(key).count()`` partially aggregates map-side in JVM codegen,
-    so (a) the exchange carries at most distinct-keys-per-map-task rows
-    instead of the raw row stream, and (b) the Python boundary (guide §4)
-    sees one (key, count) pair per distinct key instead of every row —
-    ``Cqf.from_hashes(counts=...)`` aggregates identically, so the merged
-    sketch is exactly the one the raw-stream build produced.  The
-    persisted frame doubles as the probe key set: the r1-r5 query plans
-    paid a second full scan + distinct-shuffle to enumerate probes that
-    this frame already holds (null keys stay in the frame so the probe
-    set matches ``.distinct()`` exactly; ``build_sketches`` drops them
-    from the sketch, as before).  ``persist=False`` is available for
-    one-shot library callers; the gate queries keep the default — the
-    frame is distinct-key-sized (persisting it is cheap), several
-    queries read it twice (build + probe), and a steady-state re-run of
-    the same query reuses it, which is exactly what the bench's
+    A build alone does not need it: ``cqf_aggregate`` without
+    ``count_col`` runs the same ``groupBy(key).count()`` itself.  Here the
+    persisted frame feeds the build (``count_col="__cnt"``, same sketch
+    bytes) AND enumerates the probe keys, which the r1-r5 query plans paid
+    a second full scan + distinct-shuffle for (null keys stay in the frame
+    so the probe set matches ``.distinct()`` exactly; ``build_sketches``
+    drops them from the sketch, as before).  ``persist=False`` is
+    available for one-shot library callers; the gate queries keep the
+    default — the frame is distinct-key-sized (persisting it is cheap),
+    several queries read it twice (build + probe), and a steady-state
+    re-run of the same query reuses it, which is exactly what the bench's
     best-of-trials discipline measures."""
     out = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("__cnt"))
     return out.persist() if persist else out

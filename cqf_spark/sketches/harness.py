@@ -84,8 +84,10 @@ def merge_partials(partials: Any, fan_in: int = 64) -> Sketch:
     driver-side k-way merge (mirrors aggregator.tree_merge)."""
     from pyspark.sql import functions as F
 
+    from ..aggregator import partition_bound
+
     df = partials.select("sketch")
-    n = df.rdd.getNumPartitions()
+    n = partition_bound(df)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sks = [from_bytes(bytes(b)) for b in pdf["sketch"]]

@@ -38,3 +38,34 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def stage_tasks(spark):
+    """``stage_tasks(fn) -> (fn(), {stage id: completed tasks})`` for every
+    stage of every job ``fn`` started, read from ``statusTracker()`` once
+    the listener bus has drained.  ``fn`` runs under a job group of its
+    own.  A stage that a job skipped (its shuffle output already existed)
+    reads 0, so a stage computed twice shows up as a second nonzero entry.
+    """
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"stage-tasks-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        tasks = {}
+        for job in tracker.getJobIdsForGroup(group):
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                tasks[stage] = 0 if info is None else info.numCompletedTasks
+        return out, tasks
+
+    return run
