@@ -21,7 +21,7 @@ partitions replace the reference's region spin-locks, src/gqf.c:146-244);
 per-partition metrics replace the per-CPU partitioned counters
 (src/partitioned_counter.c).  Nothing here runs a Spark job while
 planning: partition counts are read off the physical plan
-(:func:`partition_bound`), so each stage runs once, inside the collect.
+(:func:`plan_partitions`), so each stage runs once, inside the collect.
 """
 
 from __future__ import annotations
@@ -32,10 +32,12 @@ import tempfile
 import threading
 import zipfile
 from collections.abc import Iterator
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 
 from .config import CqfConfig, HashMode
 from .core import Cqf, hash_keys
@@ -157,82 +159,156 @@ def hash_arrow(arr: Any, config: CqfConfig) -> np.ndarray:
     return hash_keys(np_arr.astype(np.int64).view(np.uint64), config)
 
 
-# Plan nodes whose partitions only exist once a job has run: asking
-# ``df.rdd`` for their partition count executes the plan up to them (AQE
-# materializes every query stage, a cached relation builds its buffers).
-# AQE wraps any plan that needs an exchange, a subquery or a cached scan.
-_STAGED_NODES = frozenset(
-    {"AdaptiveSparkPlanExec", "Exchange", "InMemoryTableScanExec"}
-)
+class PlannedPartitions(NamedTuple):
+    """A DataFrame's partition count as its physical plan states it.
+
+    ``n`` is exact when ``exact`` is set.  Otherwise an exchange that AQE
+    may re-plan decides it: ``n`` is that exchange's partition count,
+    which coalescing can only lower and a skewed join can raise by
+    splitting partitions.  ``scans_only``: every partition comes from a
+    scan through narrow operators (broadcast joins included), with no
+    shuffle or cached relation on the way."""
+
+    n: int
+    exact: bool
+    scans_only: bool
 
 
-def _node_classes(node: Any) -> set[str]:
-    names = set()
+# plan node class -> simple names of its classes and traits; each name
+# costs a py4j round trip, so every class is walked once per process
+_CLASS_NAMES: dict[str, frozenset[str]] = {}
+
+
+def _node_classes(node: Any) -> frozenset[str]:
+    """Simple names of a plan node's classes and the traits they mix in."""
     cls = node.getClass()
-    while cls is not None:
-        names.add(cls.getSimpleName())
-        cls = cls.getSuperclass()
+    names = _CLASS_NAMES.get(cls.getName())
+    if names is None:
+        found: set[str] = set()
+        todo = [cls]
+        while todo:
+            c = todo.pop()
+            if c is None or c.getSimpleName() in found:
+                continue
+            found.add(c.getSimpleName())
+            todo.append(c.getSuperclass())
+            todo.extend(c.getInterfaces())
+        names = _CLASS_NAMES[cls.getName()] = frozenset(found)
     return names
 
 
-def _exchange_partitions(df: Any) -> list[int] | None:
-    """Walk ``df``'s physical plan node classes through py4j, descending
-    into AQE's input plan and into cached relations' plans.  Planning only:
-    nothing executes.  ``None`` when no node needs a job to exist (scans
-    and narrow operators only, where ``df.rdd`` is a file listing);
-    otherwise the partition counts of the exchanges already in the plan
-    (an explicit repartition; AQE inserts the others later)."""
-    staged = False
-    counts: list[int] = []
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        classes = _node_classes(node)
-        if classes & _STAGED_NODES:
-            staged = True
-        if "Exchange" in classes:
-            counts.append(int(node.outputPartitioning().numPartitions()))
-        if "AdaptiveSparkPlanExec" in classes:
-            stack.append(node.inputPlan())
-        elif "InMemoryTableScanExec" in classes:
-            stack.append(node.relation().cachedPlan())
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    return counts if staged else None
+def _children(node: Any) -> list[Any]:
+    children = node.children()
+    return [children.apply(i) for i in range(children.size())]
 
 
-def partition_bound(df: Any) -> int:
-    """Upper bound on ``df``'s partition count, without running a job.
+def _leaf_partitions(node: Any, classes: frozenset[str]) -> int:
+    # a scan's RDD is its file (or split) listing; nothing runs until a
+    # job reads it
+    if classes & {"FileSourceScanExec", "DataSourceV2ScanExecBase"}:
+        return int(node.inputRDD().getNumPartitions())
+    return int(node.execute().getNumPartitions())
 
-    Exact for scan-only plans (``df.rdd`` lists files, nothing runs).  A
-    plan that holds an exchange or a cached scan would run to answer, so
-    it is bounded instead by the session's shuffle partition count (or an
-    explicit repartition's, if larger): AQE only coalesces.  A cached scan
-    of more splits than that, or a union of shuffled frames, can exceed
-    the bound."""
-    counts = _exchange_partitions(df)
-    if counts is None:
-        return df.rdd.getNumPartitions()
+
+def _walk_partitions(
+    node: Any, adaptive: bool, shuffle_n: int
+) -> PlannedPartitions | None:
+    """Partition count of one physical plan node; ``None`` for a
+    broadcast, which is not a partition source.  ``adaptive``: AQE may
+    still re-plan the node's exchanges."""
+    classes = _node_classes(node)
+    if classes & {"BroadcastExchangeLike", "BroadcastQueryStageExec"}:
+        return None
+    if "ReusedExchangeExec" in classes:
+        return _walk_partitions(node.child(), adaptive, shuffle_n)
+    if "AdaptiveSparkPlanExec" in classes:
+        # before it runs, executedPlan is the plan with every exchange in
+        # place; after, the finished query stages
+        return _walk_partitions(node.executedPlan(), True, shuffle_n)
+    if "QueryStageExec" in classes:
+        # a materialized stage: any coalescing shows as an AQEShuffleRead
+        # above it, so the exchange inside reads as it ran
+        return _walk_partitions(node.plan(), False, shuffle_n)
+    if "AQEShuffleReadExec" in classes:
+        n = int(node.partitionSpecs().size())
+        return PlannedPartitions(n, True, False)
+    if "InMemoryTableScanExec" in classes:
+        # a cached relation has its plan's partitions
+        inner = _walk_partitions(
+            node.relation().cachedPlan(), False, shuffle_n
+        )
+        return inner._replace(scans_only=False)
+    if "ShuffleExchangeLike" in classes:
+        n = int(node.outputPartitioning().numPartitions())
+        origin = node.shuffleOrigin().getClass().getSimpleName()
+        # AQE leaves an explicit repartition(n) alone
+        exact = not adaptive or origin.startswith("REPARTITION_BY_NUM")
+        return PlannedPartitions(n, exact, False)
+    if classes & {"CollectLimitExec", "TakeOrderedAndProjectExec"}:
+        return PlannedPartitions(1, True, False)
+    children = _children(node)
+    if not children:
+        try:
+            n = _leaf_partitions(node, classes)
+            return PlannedPartitions(n, True, True)
+        except (Py4JError, CapturedException):
+            # a source that cannot list itself unexecuted
+            return PlannedPartitions(shuffle_n, False, False)
+    kids = [
+        p
+        for p in (_walk_partitions(c, adaptive, shuffle_n) for c in children)
+        if p is not None
+    ]
+    if not kids:  # an operator over a broadcast only
+        return None
+    exact = all(k.exact for k in kids)
+    scans_only = all(k.scans_only for k in kids)
+    if "CoalesceExec" in classes:
+        n = min(int(node.numPartitions()), kids[0].n)
+    elif "UnionExec" in classes:
+        n = sum(k.n for k in kids)
+        # children that share one shuffle's partitioning may be read as
+        # one (a partitioning-aware union): the sum is exact over scans
+        exact = exact and scans_only
+    elif "CartesianProductExec" in classes:
+        n = math.prod(k.n for k in kids)
+    else:
+        # narrow operators and joins: the streamed or co-partitioned
+        # children share one count
+        n = max(k.n for k in kids)
+    return PlannedPartitions(n, exact, scans_only)
+
+
+def plan_partitions(df: Any) -> PlannedPartitions:
+    """``df``'s partition count read off its physical plan through py4j
+    (node classes, not the plan string).  Planning only: no job runs,
+    where ``df.rdd.getNumPartitions()`` would run every exchange and
+    build every cache in the plan first."""
     conf = df.sparkSession._jsparkSession.sessionState().conf()
-    return max([int(conf.numShufflePartitions())] + counts)
+    return _walk_partitions(
+        df._jdf.queryExecution().executedPlan(),
+        False,
+        int(conf.numShufflePartitions()),
+    )
 
 
 def ensure_parallelism(df: Any, min_parts: int | None = None) -> Any:
-    """Repartition only bare scans that have fewer splits than the cluster
-    has cores (small-file inputs).  At scale, parquet inputs already have
-    thousands of splits and this is a metadata-only no-op — no shuffle is
-    added to the 100 TB path.  The repartition happens on the *pruned*
-    columns, so at most (key, count) longs move.
+    """Repartition only inputs that come straight from scans with fewer
+    splits than the cluster has cores (small-file inputs).  At scale,
+    parquet inputs already have thousands of splits and this is a
+    metadata-only no-op — no shuffle is added to the 100 TB path.  The
+    repartition happens on the *pruned* columns, so at most (key, count)
+    longs move.
 
-    Inputs whose plan holds an exchange or a cached scan are left alone:
-    their partitioning is the shuffle's (or the cache's), and counting
-    their partitions would run the plan once as a job of its own before
-    the caller runs it again."""
-    if _exchange_partitions(df) is not None:
+    Inputs whose plan holds a shuffle or a cached scan are left alone:
+    their partitioning is the shuffle's (or the cache's).  The decision
+    reads the plan (:func:`plan_partitions`) and runs nothing."""
+    planned = plan_partitions(df)
+    if not planned.scans_only:
         return df
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_parts:
+    if planned.n < min_parts:
         return df.repartition(min_parts)
     return df
 
@@ -388,16 +464,17 @@ def tree_merge(sketch_df: Any, fan_in: int = 64,
     when ``empty`` is not given.
     """
     df = sketch_df.select("sketch")
-    # blob count gates the executor rounds.  partition_bound is exact for
-    # build_sketches over a scan (one blob row per input partition) and an
-    # upper bound over an exchange, read off the plan either way: counting
+    # blob count gates the executor rounds.  plan_partitions is exact for
+    # build_sketches over a scan, a cache or an explicit repartition (one
+    # blob row per input partition) and the exchange's count over a
+    # shuffle AQE may coalesce, read off the plan either way: counting
     # through df.rdd would run the exchange as a job of its own before the
     # collect, and again inside it once a merge round wraps the frame in a
     # new plan.  It is wrong for re-read frames (a parquet scan's split
     # count tracks file sizes, not rows) — those callers pass n_blobs
     # explicitly (checkpoint.py) so 100k compacted blobs still take the
     # executor rounds instead of a driver-side collect.
-    n = n_blobs if n_blobs is not None else partition_bound(df)
+    n = n_blobs if n_blobs is not None else plan_partitions(df).n
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sks = [Cqf.from_bytes(bytes(b)) for b in pdf["sketch"]]
@@ -436,8 +513,10 @@ def cqf_aggregate(
     distinct key instead of every row.
     ``Cqf.from_hashes(counts=...)`` aggregates identically, so the sketch
     bytes are those of the raw-stream build.  The cost: an all-distinct
-    stream pays that exchange for nothing (on 4 cores, 4M distinct longs
-    took 2.5-3.2 s without it and 3.7-4.3 s with it).
+    stream pays that exchange for nothing when its input already has a
+    split per core (on 4 cores, 4M distinct longs in 4 partitions took
+    2.5-3.2 s without it and 3.7-4.3 s with it); an input of fewer
+    splits is repartitioned by the raw path too.
     ``tree_merge(build_sketches(df, ...))`` is the raw path for callers
     whose keys are known to be distinct.  An empty input (or one whose
     keys are all null) gives the empty sketch.

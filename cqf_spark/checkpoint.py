@@ -39,7 +39,7 @@ from typing import Any
 
 import pandas as pd
 
-from .aggregator import build_sketches, partition_bound, tree_merge
+from .aggregator import build_sketches, plan_partitions, tree_merge
 from .config import CqfConfig
 from .core import Cqf
 from .functions.hashing import fingerprint_bytes
@@ -174,11 +174,14 @@ class CheckpointedBuild:
         probe = build_sketches(
             df, key_col, config, count_col=count_col, value_col=value_col
         )
-        # read off the plan, not by running it: exact for a scan of enough
-        # splits; over an exchange (ensure_parallelism's repartition of a
-        # small scan included) an upper bound, whose ids past the real
-        # partition count are recorded as empty partitions below
-        n_parts = partition_bound(probe)
+        # resume needs the exact count: a partial past it would never be
+        # rebuilt.  The plan states it for scans, caches and explicit
+        # repartitions (ensure_parallelism's included); an exchange AQE may
+        # re-plan only states its count once it has run.
+        planned = plan_partitions(probe)
+        n_parts = (
+            planned.n if planned.exact else probe.rdd.getNumPartitions()
+        )
         if n_parts_hint is not None and n_parts_hint != n_parts:
             valid, partial_rows = {}, []  # input shape changed: full rebuild
 

@@ -4,10 +4,11 @@ stage).  Exact end-to-end, CQF-accelerated.
 
 Topology at 100 TB: the benchmark side is small (eval suites are
 thousands of documents), so its distinct n-gram set becomes ONE
-broadcast CQF (built distributed, ``cqf_aggregate``).  The corpus's
-exploded gram stream is probed scan-locally — only the true hits plus
-the alpha*2^-r false-positive sliver ever reach the exact verify join —
-and the per-document tallies partial-aggregate before their one
+broadcast CQF (built distributed by the raw per-partition build, since
+the set is already distinct).  The corpus's exploded gram stream is
+probed scan-locally — only the true hits plus the alpha*2^-r
+false-positive sliver ever reach the exact verify join — and the
+per-document tallies partial-aggregate before their one
 exchange on doc id.  Corpus text and non-matching grams never shuffle.
 
 Exactness: the CQF has no false negatives (every benchmark gram is
@@ -21,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..aggregator import contains_udf, cqf_aggregate
+from ..aggregator import build_sketches, contains_udf, tree_merge
 from ..config import CqfConfig
+from ..core import Cqf
 
 
 def ngrams_expr(n: int, text_col: str = "text"):
@@ -53,8 +55,11 @@ def contamination_scores(
         benchmark.select(F.explode(ngrams_expr(n, text_col)).alias("_g"))
         .distinct()
     )
-    sketch = cqf_aggregate(
-        bench_grams, "_g", config or CqfConfig(key_bits=48, seed=29)
+    config = config or CqfConfig(key_bits=48, seed=29)
+    # the gram set is already distinct: the raw build, no second exchange
+    sketch = tree_merge(
+        build_sketches(bench_grams, "_g", config),
+        empty=Cqf.empty(config, config.qbits_for(0)),
     )
     spark = corpus.sparkSession
     doc_grams = corpus.select(

@@ -181,7 +181,10 @@ def q_kv_store_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(5),
     )
     keyed = docs.select("doc_id", lang_code.alias("lang_code"))
-    sketch = cqf_aggregate(keyed, "doc_id", KV_CONFIG, value_col="lang_code")
+    # doc_id is unique: the raw build, no pre-aggregation exchange
+    sketch = tree_merge(
+        build_sketches(keyed, "doc_id", KV_CONFIG, value_col="lang_code")
+    )
     return keyed.select(
         "doc_id", query_value_udf(spark, sketch)("doc_id").alias("lang_code")
     )

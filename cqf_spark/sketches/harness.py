@@ -84,10 +84,10 @@ def merge_partials(partials: Any, fan_in: int = 64) -> Sketch:
     driver-side k-way merge (mirrors aggregator.tree_merge)."""
     from pyspark.sql import functions as F
 
-    from ..aggregator import partition_bound
+    from ..aggregator import plan_partitions
 
     df = partials.select("sketch")
-    n = partition_bound(df)
+    n = plan_partitions(df).n
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sks = [from_bytes(bytes(b)) for b in pdf["sketch"]]

@@ -4,8 +4,10 @@ corruption recovery, and final-sketch equality with a direct build."""
 import json
 import os
 import shutil
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 
 from cqf_spark.aggregator import cqf_aggregate
 from cqf_spark.checkpoint import CheckpointedBuild, _manifest_path
@@ -65,6 +67,39 @@ def test_resume_rebuilds_corrupted_partition(spark, sf_dir, ckpt_dir):
     m2 = json.load(open(mpath))
     assert m2["rebuilt_partitions"] == 1
     assert m2["resumed_partitions"] == m2["n_partitions"] - 1
+
+
+def test_resume_rebuilds_a_high_partition_of_a_cached_input(
+    spark, sf_dir, ckpt_dir
+):
+    # a cached scan of more partitions than a shuffle has: resume must
+    # see every partition id, or a corrupt partial past the shuffle
+    # count would drop out of the merge unnoticed
+    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    li = _lineitem(spark, sf_dir).select("l_partkey")
+    assert li.rdd.getNumPartitions() == 1
+    df = reduce(DataFrame.union, [li] * (shuffle_n + 4)).cache()
+    try:
+        first = CheckpointedBuild(spark, ckpt_dir).aggregate(
+            df, "l_partkey", CFG
+        )
+        mpath = _manifest_path(ckpt_dir)
+        manifest = json.load(open(mpath))
+        assert manifest["n_partitions"] == shuffle_n + 4
+        assert len(manifest["partitions"]) == shuffle_n + 4
+        top = max(manifest["partitions"], key=lambda r: r["part_id"])
+        assert top["part_id"] == shuffle_n + 3
+        top["blob_hash"] += 1
+        json.dump(manifest, open(mpath, "w"))
+        sk = CheckpointedBuild(spark, ckpt_dir).aggregate(
+            df, "l_partkey", CFG
+        )
+    finally:
+        df.unpersist()
+    assert sk.to_bytes() == first.to_bytes()
+    m2 = json.load(open(mpath))
+    assert m2["rebuilt_partitions"] == 1
+    assert sk.nelts == df.count()
 
 
 def test_config_change_invalidates(spark, sf_dir, ckpt_dir):

@@ -119,6 +119,18 @@ def test_short_docs_score_zero(spark):
     assert got.loc[2, "n_hits"] == 1  # "a b c d e" appears once
 
 
+def test_benchmark_without_grams_scores_zero(spark):
+    # every benchmark text is shorter than n: an empty gram set builds
+    # the empty sketch, and nothing is flagged
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g"), (2, "x y")], "doc_id long, text string"
+    )
+    bench = spark.createDataFrame([(1, "a b c")], "bench_id long, text string")
+    got = contamination_scores(docs, bench, n=5).toPandas()
+    assert sorted(got["doc_id"]) == [1, 2]
+    assert (got["n_hits"] == 0).all() and (got["score"] == 0.0).all()
+
+
 def test_probe_runs_scan_side(spark, sf_dir):
     """The gram probe must evaluate scan-side (ArrowEvalPython present —
     the broadcast-blob probe, whose below-the-exchange placement is

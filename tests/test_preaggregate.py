@@ -6,7 +6,9 @@ step of a build runs a Spark job to plan itself.
   keys, with a packed value column and with a qbits hint;
 - an empty (or all-null) input still gives the empty sketch;
 - ``ensure_parallelism`` and ``tree_merge`` read partition counts off the
-  physical plan, so every stage runs once, inside the final collect;
+  physical plan, so every stage runs once, inside the final collect; the
+  count is exact for scans, broadcast joins, caches and explicit
+  repartitions;
 - dsir and lm_quality build the same sketches as a hand-written
   ``groupBy(gram).count()`` feeding ``count_col``;
 - the build sees one row per distinct key.
@@ -19,7 +21,7 @@ from cqf_spark.aggregator import (
     build_sketches,
     cqf_aggregate,
     ensure_parallelism,
-    partition_bound,
+    plan_partitions,
     tree_merge,
 )
 from cqf_spark.config import CqfConfig
@@ -124,18 +126,104 @@ def test_ensure_parallelism_runs_nothing(spark, sf_dir, stage_tasks):
         cached.unpersist()
 
 
-def test_partition_bound_reads_the_plan(spark, sf_dir, stage_tasks):
-    li = load(spark, sf_dir, "lineitem").select("l_partkey")
+def test_plan_partitions_reads_the_plan(spark, sf_dir, stage_tasks):
+    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    sup = load(spark, sf_dir, "supplier").select("s_suppkey")
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    (bare, grouped, wide), tasks = stage_tasks(lambda: (
-        partition_bound(li),
-        partition_bound(li.groupBy("l_partkey").count()),
-        partition_bound(li.repartition(shuffle_n + 5)),
-    ))
-    assert tasks == {}
-    assert bare == li.rdd.getNumPartitions()
-    assert grouped == shuffle_n                # AQE only coalesces
-    assert wide == shuffle_n + 5               # an explicit repartition
+    # a cached relation of more partitions than a shuffle has, cold here
+    cached = li.repartition(shuffle_n + 4).cache()
+    frames = {
+        "bare": li,
+        "grouped": li.groupBy("l_partkey").count(),
+        "wide": li.repartition(shuffle_n + 5),
+        "broadcast": li.join(
+            F.broadcast(sup), li.l_suppkey == sup.s_suppkey
+        ),
+        "union": li.union(li),
+        "cached": cached.select("l_partkey"),
+    }
+    try:
+        planned, tasks = stage_tasks(
+            lambda: {k: plan_partitions(v) for k, v in frames.items()}
+        )
+        assert tasks == {}                     # nothing ran, not the cache
+        n_scan = li.rdd.getNumPartitions()
+        assert planned["bare"] == (n_scan, True, True)
+        # AQE may coalesce a groupBy's shuffle: its count, not exact
+        assert planned["grouped"] == (shuffle_n, False, False)
+        # ... but leaves an explicit repartition alone
+        assert planned["wide"] == (shuffle_n + 5, True, False)
+        # a broadcast side is not a partition source
+        assert planned["broadcast"] == (n_scan, True, True)
+        assert planned["union"] == (2 * n_scan, True, True)
+        assert planned["cached"] == (shuffle_n + 4, True, False)
+        cached.count()                         # the same once it is built
+        assert plan_partitions(cached) == (shuffle_n + 4, True, False)
+        for k, df in frames.items():
+            assert planned[k].n == df.rdd.getNumPartitions() or (
+                not planned[k].exact
+            ), k
+    finally:
+        cached.unpersist()
+
+
+def _no_merge_rounds(monkeypatch):
+    from pyspark.sql.group import GroupedData
+
+    rounds = []
+    real = GroupedData.applyInPandas
+
+    def spy(self, *args, **kwargs):
+        rounds.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    return rounds
+
+
+def test_tree_merge_counts_a_small_scan_exactly(spark, monkeypatch):
+    # ensure_parallelism's own repartition(cores) is never coalesced, so
+    # a small frame (a streaming micro-batch) merges in a single collect
+    # even when the session's shuffle partition count exceeds fan_in
+    df = spark.createDataFrame(
+        [(i % 13,) for i in range(500)], "k long"
+    ).coalesce(1)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        rounds = _no_merge_rounds(monkeypatch)
+        parts = build_sketches(df, "k", INT_CONFIG)
+        assert plan_partitions(parts) == (
+            spark.sparkContext.defaultParallelism, True, False
+        )
+        sk = tree_merge(parts)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        monkeypatch.undo()
+    assert rounds == []
+    assert sk.nelts == 500
+
+
+def test_tree_merge_rounds_over_a_wide_cache(spark, monkeypatch):
+    # a cached input of more partitions than the shuffle partition count
+    # still gets the executor rounds its blob count calls for
+    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cached = (
+        spark.range(0, 4000, 1, 2 * shuffle_n)
+        .select((F.col("id") % 211).alias("k"))
+        .cache()
+    )
+    try:
+        want = tree_merge(build_sketches(cached, "k", INT_CONFIG))
+        rounds = _no_merge_rounds(monkeypatch)
+        got = tree_merge(
+            build_sketches(cached, "k", INT_CONFIG), fan_in=shuffle_n + 1
+        )
+        monkeypatch.undo()
+    finally:
+        cached.unpersist()
+    assert rounds == [1]
+    assert got.to_bytes() == want.to_bytes()
 
 
 def _jobs_at_collect(spark, monkeypatch):
