@@ -11,7 +11,7 @@ Pipeline shape of ``cqf_aggregate`` (all Arrow-batched, no per-row Python):
       -> applyInPandas merge rounds      # only while > fan_in blobs remain
          or collect                      #   = qf_multi_merge (gqf.c:2479)
       -> broadcast sketch                # qf_serialize bytes on the wire
-      -> pandas_udf probes               # qf_count_key_value, vectorized
+      -> arrow_udf probes                # qf_count_key_value, vectorized
 
 ``build_sketches`` + ``tree_merge`` is the same chain without the JVM
 pre-aggregation: one partial sketch per input partition.  After the
@@ -36,6 +36,7 @@ from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from py4j.protocol import Py4JError
 from pyspark.errors.exceptions.captured import CapturedException
 
@@ -119,8 +120,6 @@ def hash_series(s: pd.Series, config: CqfConfig) -> np.ndarray:
     if s.dtype == object or pd.api.types.is_string_dtype(s.dtype):
         if config.hash_mode != HashMode.DEFAULT:
             raise ValueError("string keys require HashMode.DEFAULT")
-        import pyarrow as pa
-
         # one C-level conversion to Arrow, then buffer-direct murmur —
         # no per-row .encode loop (VERDICT r01 #1)
         arr = pa.Array.from_pandas(s)
@@ -134,11 +133,20 @@ def hash_series(s: pd.Series, config: CqfConfig) -> np.ndarray:
     return hash_keys(arr.astype(np.int64).view(np.uint64), config)
 
 
-def hash_arrow(arr: Any, config: CqfConfig) -> np.ndarray:
-    """Hash one Arrow column (from a ``mapInArrow`` RecordBatch) into the
-    sketch universe — the zero-Python-object twin of :func:`hash_series`."""
-    import pyarrow as pa
+def _arrow_numbers(col: Any) -> np.ndarray:
+    """A numeric Arrow column as numpy, nulls as 0.  Without the fill a
+    null-bearing integer column converts through float64, which drops the
+    low bits of values at or above 2**53."""
+    if col.null_count:
+        col = col.fill_null(False if pa.types.is_boolean(col.type) else 0)
+    return col.to_numpy(zero_copy_only=False)
 
+
+def hash_arrow(arr: Any, config: CqfConfig) -> np.ndarray:
+    """Hash one Arrow column (a ``mapInArrow`` RecordBatch column or an
+    ``arrow_udf`` argument) into the sketch universe — the
+    zero-Python-object twin of :func:`hash_series`.  Null rows hash as 0
+    or the empty string; callers mask them out of builds and results."""
     t = arr.type
     if (
         pa.types.is_string(t)
@@ -153,7 +161,7 @@ def hash_arrow(arr: Any, config: CqfConfig) -> np.ndarray:
             raise ValueError("string keys require HashMode.DEFAULT")
         mask = (1 << config.key_bits) - 1
         return murmur64a_arrow(arr, config.seed) & np.uint64(mask)
-    np_arr = arr.to_numpy(zero_copy_only=False)
+    np_arr = _arrow_numbers(arr)
     if np_arr.dtype.kind == "f":
         np_arr = np.nan_to_num(np_arr).astype(np.int64)
     return hash_keys(np_arr.astype(np.int64).view(np.uint64), config)
@@ -366,8 +374,6 @@ def build_sketches(
     # mapInArrow: string keys go Arrow buffers -> murmur directly; Python
     # string objects are never materialized on the build path.
     def build(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
         t0 = _time.time()
         hash_chunks: list[np.ndarray] = []
         count_chunks: list[np.ndarray] = []
@@ -383,8 +389,7 @@ def build_sketches(
             if value_col:
                 # pack value bits next to the remainder (src/gqf.c:1925-1926)
                 v = (
-                    rb.column(names.index(value_col))
-                    .to_numpy(zero_copy_only=False)
+                    _arrow_numbers(rb.column(names.index(value_col)))
                     .astype(np.int64)
                     .view(np.uint64)
                 )
@@ -394,9 +399,9 @@ def build_sketches(
             hash_chunks.append(h)
             if count_col:
                 count_chunks.append(
-                    rb.column(names.index(count_col))
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.uint64)
+                    _arrow_numbers(rb.column(names.index(count_col))).astype(
+                        np.uint64
+                    )
                 )
         hashes = (
             np.concatenate(hash_chunks)
@@ -536,108 +541,86 @@ def cqf_aggregate(
 
 
 # --------------------------------------------------------------------- #
-# probe side: broadcast sketch + vectorized pandas UDFs (SURVEY.md §3.2)
+# probe side: broadcast sketch + vectorized Arrow UDFs (SURVEY.md §3.2)
 # --------------------------------------------------------------------- #
 
-def count_udf(spark: Any, sketch: Cqf):
-    """pandas UDF: approximate multiplicity of each key (long).
+def _probe_udf(spark: Any, sketch: Cqf, return_type: Any, probe: Any, null: Any):
+    """The one broadcast-probe factory behind the UDFs below.
 
-    qf_count_key_value broadcast to executors.  Each Arrow batch is hashed
-    and probed as a whole: ``Cqf.count_hashes`` sorts the batch's hashes,
-    searches the sketch's decoded sorted hashes with them, and returns the
-    counts in the batch's row order.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
+    The sketch's wire bytes are broadcast once; each executor decodes
+    them once (:func:`_cached_sketch`).  Every Arrow batch of keys is
+    hashed straight off its buffers by :func:`hash_arrow`, never through
+    pandas, whose conversion would turn a null-bearing long column into
+    float64 and miss keys at or above 2**53.  ``probe(sk, key_hashes)``
+    answers the whole batch in one vectorized call (``Cqf.count_hashes``
+    and its twins sort the batch, search the decoded hashes and return
+    results in row order); null keys read ``null``."""
+    from pyspark.sql.functions import arrow_udf
 
     ensure_shipped(spark)
     blob = spark.sparkContext.broadcast(sketch.to_bytes())
     config = sketch.config
 
-    @pandas_udf(LongType())
-    def _count(keys: pd.Series) -> pd.Series:
-        sk = _cached_sketch(blob.value)
-        h = hash_series(keys, config)
-        if config.value_bits:
-            # sketch content is value-packed (build_sketches shifts the
-            # key hash by value_bits): probe at value 0, matching
-            # Cqf.count's default — an unshifted probe would compare a
-            # raw key hash against packed hashes and always miss
-            h = h << np.uint64(config.value_bits)
-        # keys are hashed here, then counted against pre-hashed content
-        out = sk.count_hashes(h).astype(np.int64)
-        out[keys.isna().to_numpy()] = 0
-        return pd.Series(out)
+    @arrow_udf(return_type)
+    def _probe(keys: pa.Array) -> pa.Array:
+        out = probe(_cached_sketch(blob.value), hash_arrow(keys, config))
+        if keys.null_count:
+            out[keys.is_null().to_numpy(zero_copy_only=False)] = null
+        return pa.array(out)
 
-    return _count
+    return _probe
+
+
+def count_udf(spark: Any, sketch: Cqf):
+    """Arrow UDF: approximate multiplicity of each key (long; 0 = absent
+    or null).  qf_count_key_value broadcast to executors.  A value-packed
+    sketch is probed at value 0, as ``Cqf.count`` does by default."""
+    from pyspark.sql.types import LongType
+
+    vb = np.uint64(sketch.config.value_bits)
+    return _probe_udf(
+        spark, sketch, LongType(),
+        lambda sk, h: sk.count_hashes(h << vb).view(np.int64), 0,
+    )
 
 
 def contains_udf(spark: Any, sketch: Cqf):
-    """pandas UDF: approximate membership (boolean; no false negatives)."""
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: approximate membership (boolean; no false negatives,
+    False for null keys)."""
     from pyspark.sql.types import BooleanType
 
-    ensure_shipped(spark)
-    blob = spark.sparkContext.broadcast(sketch.to_bytes())
-    config = sketch.config
-
-    @pandas_udf(BooleanType())
-    def _contains(keys: pd.Series) -> pd.Series:
-        sk = _cached_sketch(blob.value)
-        h = hash_series(keys, config)
-        if config.value_bits:
-            h = h << np.uint64(config.value_bits)  # see _count
-        out = sk.count_hashes(h) > 0
-        out[keys.isna().to_numpy()] = False
-        return pd.Series(out)
-
-    return _contains
+    vb = np.uint64(sketch.config.value_bits)
+    return _probe_udf(
+        spark, sketch, BooleanType(),
+        lambda sk, h: sk.count_hashes(h << vb) > 0, False,
+    )
 
 
 def query_value_udf(spark: Any, sketch: Cqf):
-    """pandas UDF: qf_query's stored value for each key (long, -1 if absent)."""
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: qf_query's stored value for each key (long, -1 if
+    absent or null)."""
     from pyspark.sql.types import LongType
 
-    ensure_shipped(spark)
-    blob = spark.sparkContext.broadcast(sketch.to_bytes())
+    def probe(sk: Cqf, h: np.ndarray) -> np.ndarray:
+        counts, values = sk.query_hashes(h)
+        out = values.view(np.int64)
+        out[counts == 0] = -1
+        return out
 
-    @pandas_udf(LongType())
-    def _value(keys: pd.Series) -> pd.Series:
-        sk = _cached_sketch(blob.value)
-        na = keys.isna().to_numpy()
-        counts, values = sk.query(
-            keys.fillna(0).to_numpy().astype(np.int64).view(np.uint64)
-        )
-        out = values.astype(np.int64)
-        out[(counts == 0) | na] = -1  # null probes read as absent
-        return pd.Series(out)
-
-    return _value
+    return _probe_udf(spark, sketch, LongType(), probe, -1)
 
 
 def unique_index_udf(spark: Any, sketch: Cqf):
-    """pandas UDF: qf_get_unique_index per key (src/gqf.c:2095-2132) —
+    """Arrow UDF: qf_get_unique_index per key (src/gqf.c:2095-2132) —
     the slot index of the key's counter (perfect-hash handle), -1 when
-    absent or null.  Broadcast sketch, whole-batch numpy probe — the
-    distributed twin of :meth:`Cqf.unique_indexes`."""
-    from pyspark.sql.functions import pandas_udf
+    absent or null.  The distributed twin of :meth:`Cqf.unique_indexes`."""
     from pyspark.sql.types import LongType
 
-    ensure_shipped(spark)
-    blob = spark.sparkContext.broadcast(sketch.to_bytes())
-
-    @pandas_udf(LongType())
-    def _uidx(keys: pd.Series) -> pd.Series:
-        sk = _cached_sketch(blob.value)
-        na = keys.isna().to_numpy()
-        out = sk.unique_indexes(
-            keys.fillna(0).to_numpy().astype(np.int64).view(np.uint64)
-        )
-        out[na] = -1
-        return pd.Series(out)
-
-    return _uidx
+    vb = np.uint64(sketch.config.value_bits)
+    return _probe_udf(
+        spark, sketch, LongType(),
+        lambda sk, h: sk.unique_index_hashes(h << vb), -1,
+    )
 
 
 def build_sketches_grouped(

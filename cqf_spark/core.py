@@ -381,40 +381,73 @@ class Cqf:
     # queries (src/gqf.c:2018-2132)
     # ------------------------------------------------------------------ #
 
-    def _locate(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """The one probe kernel.  Per probe hash, in the caller's order: its
-        left insertion index into the decoded hashes, and whether that
-        slot holds it.
+    def _locate(
+        self, hashes: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The one probe kernel.  Returns ``(order, pos, found)``, all in
+        sorted needle order: ``order[i]`` is the caller's row of the i-th
+        sorted needle, ``pos[i]`` its left insertion index into the
+        decoded hashes, and ``found[i]`` whether that slot holds it.
 
-        The needles are sorted before the search.  numpy's searchsorted
-        starts each sorted key's search from the previous key's lower
-        bound, and consecutive searches touch neighbouring cache lines,
-        where random-order needles miss cache on nearly every step once
-        the sketch outgrows it.  Only all-distinct needles against a tiny,
-        cache-resident sketch pay more for the sort than the search saves
-        (about 1.3x at 31 keys); repeated needles, or any sketch past the
-        cache, gain several-fold."""
+        Needles are sorted as one packed uint64 word each, ``(h >> s) <<
+        ib | row`` with ``ib = bit_length(n - 1)`` row bits and the shift
+        ``s`` just large enough for the word to fit 64 bits.  ``ndarray.
+        sort`` on that word is numpy's vectorized sort, several times
+        faster than ``argsort`` (CLAUDE.md), and the low ``ib`` bits give
+        the order back.  When the hash and row bits fit (``s == 0``, e.g.
+        30-bit hashes and up to 2**34 probes) the order is exact hash
+        order; otherwise needles that tie on the kept prefix stay in row
+        order.  That only costs cache locality: ``searchsorted`` is exact
+        for any needle order, and starts each sorted needle's search from
+        the previous one's bound, so neighbouring searches touch
+        neighbouring cache lines instead of missing on nearly every step.
+
+        Callers gather their per-hash arrays at ``pos`` in this sorted
+        order, which walks the decoded arrays nearly sequentially, and
+        scatter once through ``order`` back to the caller's rows
+        (:meth:`_scatter`)."""
         d = self._decode()
         h = np.ascontiguousarray(hashes, dtype=np.uint64)
-        order = np.argsort(h)
+        n = h.size
+        ib = max(1, (n - 1).bit_length())
+        hbits = self.config.key_bits + self.config.value_bits
+        word = h >> _U64(max(0, hbits + ib - 64))
+        word <<= _U64(ib)
+        word |= np.arange(n, dtype=np.uint64)
+        word.sort()
+        word &= _U64((1 << ib) - 1)
+        order = word.view(np.int64)
         hs = h[order]
         pos = np.searchsorted(d.hashes, hs, side="left")
-        found = np.zeros(h.size, dtype=bool)
         if d.hashes.size:
-            found = d.hashes[np.minimum(pos, d.hashes.size - 1)] == hs
-        idx = np.empty_like(pos)
-        idx[order] = pos
-        hit = np.empty_like(found)
-        hit[order] = found
-        return idx, hit
+            found = d.hashes.take(pos, mode="clip") == hs
+        else:
+            found = np.zeros(n, dtype=bool)
+        return order, pos, found
+
+    @staticmethod
+    def _scatter(
+        src: np.ndarray,
+        order: np.ndarray,
+        pos: np.ndarray,
+        found: np.ndarray,
+        fill: int,
+    ) -> np.ndarray:
+        """``src[pos]`` where ``found`` else ``fill``, gathered in sorted
+        needle order and scattered once into the caller's row order."""
+        out = np.empty(order.size, dtype=src.dtype)
+        if src.size == 0:
+            out.fill(fill)
+            return out
+        got = src.take(pos, mode="clip")
+        got[~found] = fill
+        out[order] = got
+        return out
 
     def count_hashes(self, hashes: np.ndarray) -> np.ndarray:
         """Multiplicity per pre-hashed probe; 0 = definitely absent."""
-        d = self._decode()
-        idx, hit = self._locate(hashes)
-        out = np.zeros(idx.size, dtype=np.uint64)
-        out[hit] = d.counts[idx[hit]]
-        return out
+        order, pos, found = self._locate(hashes)
+        return self._scatter(self._decode().counts, order, pos, found, 0)
 
     def count(self, keys: np.ndarray, values: np.ndarray | None = None) -> np.ndarray:
         """qf_count_key_value (src/gqf.c:2018-2054), vectorized over probes."""
@@ -427,23 +460,27 @@ class Cqf:
     def query(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """qf_query (src/gqf.c:2056-2093): per key, total count across all
         values plus the first stored value."""
+        return self.query_hashes(hash_keys(keys, self.config))
+
+    def query_hashes(self, key_hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """:meth:`query` over key hashes (``hash_keys`` output, without
+        value bits)."""
         d = self._decode()
         vb = self.config.value_bits
-        kh = hash_keys(keys, self.config)
-        a, hit = self._locate(kh << _U64(vb))
+        lo = np.ascontiguousarray(key_hashes, dtype=np.uint64) << _U64(vb)
+        order, first, found = self._locate(lo)
+        vmask = _U64((1 << vb) - 1)
         if vb:
-            # some value of the key is stored iff the next key's first
-            # position lies past this key's
-            b, _ = self._locate((kh + _U64(1)) << _U64(vb))
-            hit = b > a
-        counts = np.zeros(kh.size, dtype=np.uint64)
-        values = np.zeros(kh.size, dtype=np.uint64)
-        # first stored value for the key; count of that first entry
-        # (the reference returns the first match's count)
-        first = a[hit]
-        counts[hit] = d.counts[first]
-        if vb:
-            values[hit] = d.hashes[first] & _U64((1 << vb) - 1)
+            # some value of the key is stored iff the right insertion index
+            # of the key's last possible hash lies past its first position
+            hi = lo[order]
+            hi |= vmask
+            found = np.searchsorted(d.hashes, hi, side="right") > first
+        # count and value of the key's first stored entry (the reference
+        # returns the first match's count)
+        counts = self._scatter(d.counts, order, first, found, 0)
+        values = self._scatter(d.hashes, order, first, found, 0)
+        values &= vmask
         return counts, values
 
     def unique_index(self, key: int, value: int = 0) -> int:
@@ -463,13 +500,14 @@ class Cqf:
         src/gqf.c:2095-2132): per key, the slot index of its counter, or
         -1 when absent.  Indexes are unique per present key and stable
         until mutation — the perfect-hash handle contract."""
-        d = self._decode()
-        idx, hit = self._locate(
+        return self.unique_index_hashes(
             _packed_hashes(np.ascontiguousarray(keys, np.uint64), values, self.config)
         )
-        out = np.full(idx.size, -1, dtype=np.int64)
-        out[hit] = d.slot_index[idx[hit]]
-        return out
+
+    def unique_index_hashes(self, hashes: np.ndarray) -> np.ndarray:
+        """:meth:`unique_indexes` over pre-hashed, value-packed probes."""
+        order, pos, found = self._locate(hashes)
+        return self._scatter(self._decode().slot_index, order, pos, found, -1)
 
     def count_navigate(self, keys: np.ndarray) -> np.ndarray:
         """The authentic rank/select query path (src/gqf.c:2018-2054 over

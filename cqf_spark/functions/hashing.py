@@ -47,8 +47,12 @@ def _murmur_concat_core(
     """One-slice kernel for :func:`murmur64a_concat` (int32 index math;
     callers guarantee the slice's byte/row totals fit int32)."""
     n = int(lens.size)
-    # longest-first order -> per-round active rows form a prefix
-    order = np.argsort(-lens, kind="stable").astype(np.int32)
+    # longest-first order -> per-round active rows form a prefix.  Sort
+    # the negated lengths in the narrowest signed dtype: numpy's stable
+    # sort of 8- and 16-bit integers is a radix sort, several times
+    # faster than its merge sort of int64
+    neg = (-lens).astype(np.min_scalar_type(-int(lens.max())))
+    order = np.argsort(neg, kind="stable").astype(np.int32)
     s_lens = lens[order]
     s_starts = starts[order]
 
@@ -59,10 +63,10 @@ def _murmur_concat_core(
     buf = np.zeros(total, dtype=np.uint8)
     nb = int(s_lens.sum())
     if nb:
-        # row-of-each-byte via boundary marks + cumsum (np.repeat and
-        # searchsorted are pathologically slow on this host — CLAUDE.md);
-        # sorted order puts zero-length rows last, so boundaries below nb
-        # are distinct and plain assignment marks them all.
+        # row-of-each-byte via boundary marks + cumsum (one int8 write per
+        # row, no int64 repeat of row ids); sorted order puts zero-length
+        # rows last, so boundaries below nb are distinct and plain
+        # assignment marks them all.
         csum = np.cumsum(s_lens)
         bounds = csum[:-1]
         marks = np.zeros(nb, dtype=np.int8)

@@ -2,6 +2,7 @@
 (golden vectors from src/hashutil.c:23-64, 132-181)."""
 
 import numpy as np
+import pytest
 
 from cqf_spark.functions.hashing import (
     hash_64,
@@ -59,3 +60,40 @@ def test_wang_bijective_bulk():
         h = hash_64(keys, mask)
         assert (hash_64i(h, mask) == keys).all()
         assert np.unique(h).size == np.unique(keys).size
+
+
+def _murmur64a_scalar(data: bytes, seed: int) -> int:
+    """MurmurHash64A one byte string at a time (src/hashutil.c:23-64)."""
+    m, r, mask = 0xC6A4A7935BD1E995, 47, (1 << 64) - 1
+    h = (seed ^ (len(data) * m)) & mask
+    body = len(data) // 8 * 8
+    for i in range(0, body, 8):
+        k = (int.from_bytes(data[i : i + 8], "little") * m) & mask
+        k ^= k >> r
+        k = (k * m) & mask
+        h = ((h ^ k) * m) & mask
+    tail = data[body:]
+    if tail:
+        h = ((h ^ int.from_bytes(tail, "little")) * m) & mask
+    h ^= h >> r
+    h = (h * m) & mask
+    return h ^ (h >> r)
+
+
+@pytest.mark.parametrize("longest", [7, 127, 128, 32_767, 32_768, 40_000])
+def test_murmur_concat_row_length_dtypes(longest):
+    """Row lengths sort in the narrowest signed dtype that holds them
+    (int8, int16, then int32); hashes stay bit-identical for empty rows,
+    rows of 1-7 bytes and rows past 32,767 bytes."""
+    rng = np.random.default_rng(longest)
+    lens = [0, 0, 1, 2, 3, 4, 5, 6, 7, 0, 3, 7, 1]
+    lens += rng.integers(0, min(longest, 64) + 1, 40).tolist() + [longest]
+    rng.shuffle(lens)
+    data = [rng.integers(0, 256, n, dtype=np.uint8).tobytes() for n in lens]
+    got = murmur64a_bytes(data, 1234)
+    assert got.tolist() == [_murmur64a_scalar(b, 1234) for b in data]
+
+
+def test_murmur_concat_all_empty_rows():
+    got = murmur64a_bytes([b""] * 5, 7)
+    assert got.tolist() == [_murmur64a_scalar(b"", 7)] * 5
