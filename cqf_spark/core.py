@@ -8,13 +8,17 @@ no false negatives and FP rate <= 2^-r at 95% load.
 
 The *physical* strategy differs deliberately (SURVEY.md §4.3): because Spark
 hands each partition's rows to us as whole Arrow batches, every mutation is a
-**vectorized bulk rebuild** — sort the (hash, count) multiset, encode
-counters, lay runs out left-to-right with the canonical first-fit rule that
-incremental inserts converge to — instead of the reference's per-key slot
-shifting (src/gqf.c:662-1022).  The resulting layout is a pure function of
-the stored multiset, which makes serialization **canonical**: any merge
-order yields bit-identical bytes (the reference's merge-associativity
-property, src/gqf.c:2432-2544, strengthened).
+**vectorized bulk rebuild** — sort the (hash, count) multiset, encode the
+multi-slot counters, and place every counter left-to-right with the
+canonical first-fit rule that incremental inserts converge to — instead of
+the reference's per-key slot shifting (src/gqf.c:662-1022).  The rule puts
+each counter at ``max(home slot, previous counter's end + 1)``; with
+``base`` the slots used before each counter it unrolls into one pass,
+``start = base + maximum.accumulate(quotient - base)`` (:meth:`Cqf.
+_rebuild`).  The resulting layout is a pure function of the stored
+multiset, which makes serialization **canonical**: any merge order yields
+bit-identical bytes (the reference's merge-associativity property,
+src/gqf.c:2432-2544, strengthened).
 
 No per-row Python anywhere on the hot path; loops are only over digit
 positions / automaton steps (O(log count), O(max run length)).
@@ -218,7 +222,21 @@ class Cqf:
     def _rebuild(self, hashes: np.ndarray, counts: np.ndarray) -> None:
         """Lay out the multiset: runs in quotient order, remainders ascending
         within a run (the invariant incremental inserts maintain,
-        src/gqf.c:1244-1264), each run at max(home_slot, prev_end + 1)."""
+        src/gqf.c:1244-1264), each run at max(home_slot, prev_end + 1).
+
+        Placement works per counter, not per slot.  With ``base[i]`` the
+        slots used before counter ``i`` (``arange(n)`` when every count is
+        1, else the exclusive cumsum of the counter lengths), counter ``i``
+        starts at ``max(q_i, start[i-1] + len[i-1])``, which unrolls to
+
+            start = base + maximum.accumulate(quotient - base)
+
+        (inside a run ``q_i`` never exceeds the previous counter's end, so
+        the rule holds for every counter, not just a run's first).  Count-1
+        counters are their remainder, written at ``start``; only the
+        ``counts > 1`` subset goes through ``encode_counters``, and its
+        slot sequences are scattered at those counters' starts.  A run ends
+        at its last counter's ``start + length - 1``."""
         geom = self.geom
         bps = geom.bits_per_slot
         keep = counts > 0
@@ -247,47 +265,78 @@ class Cqf:
                 f"{n} distinct entries > 95% of {geom.nslots} slots"
             )
 
-        quotients = (hashes >> _U64(bps)).astype(np.int64)
-        remainders = hashes & _U64((1 << bps) - 1)
+        # bps >= 1, so every quotient fits int64
+        quotients = (hashes >> _U64(bps)).view(np.int64)
         if int(quotients[-1]) >= geom.nslots:
             raise ValueError("hash outside universe for this geometry")
+        rmask = _U64((1 << bps) - 1)
 
-        flat, lengths = encode_counters(remainders, counts, bps)
+        multi = np.flatnonzero(counts > 1)
+        sub_flat, sub_len = encode_counters(
+            hashes[multi] & rmask, counts[multi], bps
+        )
+        if multi.size:
+            # base = exclusive cumsum of the counter lengths
+            lengths = np.ones(n, dtype=np.int64)
+            lengths[multi] = sub_len
+            base = np.empty(n, dtype=np.int64)
+            base[0] = 0
+            np.cumsum(lengths[:-1], out=base[1:])
+            total_used = int(base[-1] + lengths[-1])
+            del lengths
+        else:
+            base = np.arange(n, dtype=np.int64)
+            total_used = n
 
-        # group counters into runs by quotient
-        run_breaks = np.empty(n, dtype=bool)
-        run_breaks[0] = True
-        run_breaks[1:] = quotients[1:] != quotients[:-1]
-        run_first = np.flatnonzero(run_breaks)
-        run_quot = quotients[run_first]
-        run_len = np.add.reduceat(lengths, run_first)
+        # a run's last counter is followed by a new quotient
+        is_last = np.empty(n, dtype=bool)
+        np.not_equal(quotients[1:], quotients[:-1], out=is_last[:-1])
+        is_last[-1] = True
+        last = np.flatnonzero(is_last)
+        run_quot = quotients.take(last)
 
-        # placement scan: ends[i] = max(q_i + L_i - 1, ends[i-1] + L_i)
-        #  => ends = cumsum(L) + running-max(q_i - cumsum(L)_{i-1} - 1)
-        csum = np.cumsum(run_len)
-        ends = csum + np.maximum.accumulate(run_quot - (csum - run_len) - 1)
-        starts = ends - run_len + 1
+        start = quotients - base
+        np.maximum.accumulate(start, out=start)
+        start += base
+        del base
+        # a run ends at its last counter's start + length - 1; only a
+        # multi-slot last counter ends past its start
+        ends = start.take(last)
+        if multi.size:
+            ml = is_last.take(multi)
+            ends[np.searchsorted(last, multi[ml])] += sub_len[ml] - 1
+        del is_last, last
 
-        total_used = int(run_len.sum())
         if total_used > int(LOAD_FACTOR * geom.nslots):
             raise NoSpaceError(
                 f"{total_used} occupied slots > 95% of {geom.nslots}"
             )
         if int(ends[-1]) >= geom.total_slots:
             raise NoSpaceError("run placement overflows the xnslots runway")
-        self.max_displacement = int((starts - run_quot).max())
+        # run r starts at max(q_r, ends[r-1] + 1), and run 0 at its home
+        disp = ends[:-1] + 1
+        disp -= run_quot[1:]
+        self.max_displacement = max(0, int(disp.max())) if disp.size else 0
+        del disp
         if self.max_displacement > DISTANCE_FROM_HOME_SLOT_CUTOFF:
             raise NoSpaceError(
                 "home-slot displacement exceeds cutoff (src/gqf.c:45)"
             )
 
-        # physical arrays
+        # physical arrays: every counter's first slot is its remainder;
+        # the multi-slot encodings then overwrite their whole span
         slots = np.zeros(geom.total_slots, dtype=bitpack.slot_dtype(bps))
-        slot_of_flat = np.repeat(starts, run_len) + (
-            np.arange(flat.size, dtype=np.int64)
-            - np.repeat(np.concatenate(([0], csum[:-1])), run_len)
-        )
-        slots[slot_of_flat] = flat.astype(slots.dtype)
+        rem = hashes.astype(slots.dtype)
+        if slots.dtype.itemsize * 8 != bps:
+            rem &= rmask.astype(slots.dtype)
+        slots[start] = rem
+        del rem
+        if multi.size:
+            sub_first = np.cumsum(sub_len)
+            sub_first -= sub_len
+            dst = np.repeat(start.take(multi) - sub_first, sub_len)
+            dst += np.arange(sub_flat.size, dtype=np.int64)
+            slots[dst] = sub_flat.astype(slots.dtype)
 
         self.slots = slots
         self.occ_pos = run_quot
@@ -305,14 +354,8 @@ class Cqf:
         self.offsets[1:] = np.minimum(spill, 255).astype(np.uint8)
 
         # the content is already decoded: keep it rather than have the
-        # first probe re-derive it from the slots (decode_runs).  A
-        # counter's slot index is the slot of its first flat slot; when
-        # every counter is one slot long the two coincide.
-        if flat.size > n:
-            first = np.cumsum(lengths)
-            first -= lengths
-            slot_of_flat = slot_of_flat.take(first)
-        self._decoded = _Decoded(hashes, counts, slot_of_flat)
+        # first probe re-derive it from the slots (decode_runs)
+        self._decoded = _Decoded(hashes, counts, start)
 
     # ------------------------------------------------------------------ #
     # decode / iterate (src/gqf.c:2191-2419)
@@ -411,13 +454,20 @@ class Cqf:
         n = h.size
         ib = max(1, (n - 1).bit_length())
         hbits = self.config.key_bits + self.config.value_bits
-        word = h >> _U64(max(0, hbits + ib - 64))
+        shift = max(0, hbits + ib - 64)
+        word = h >> _U64(shift)
         word <<= _U64(ib)
         word |= np.arange(n, dtype=np.uint64)
         word.sort()
+        # when no bit of any hash was shifted out at either end (always
+        # for in-universe hashes with s == 0), the sorted word holds the
+        # whole hash: read the sorted needles off it instead of gathering
+        whole = shift == 0 and (n == 0 or int(h.max()) >> (64 - ib) == 0)
+        hs = word >> _U64(ib) if whole else None
         word &= _U64((1 << ib) - 1)
         order = word.view(np.int64)
-        hs = h[order]
+        if hs is None:
+            hs = h[order]
         pos = np.searchsorted(d.hashes, hs, side="left")
         if d.hashes.size:
             found = d.hashes.take(pos, mode="clip") == hs

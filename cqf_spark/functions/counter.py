@@ -24,9 +24,13 @@ those: every multi-slot counter repeats its remainder or drops below it.
 So the batch codec pays per-counter work only where a counter needs more
 than one slot:
 
-* ``encode_counters`` writes each remainder at its start and runs the
-  digit encoder (``_encode_multi``) on the ``counts > 1`` subset only,
-  scattering its slot sequences into place.
+* ``Cqf._rebuild`` (core.py) writes every counter's remainder at its
+  start slot itself and calls ``encode_counters`` on the ``counts > 1``
+  subset only, scattering the returned slot sequences at those counters'
+  starts.  ``encode_counters`` on a mixed batch (the one run
+  ``Cqf._splice`` re-encodes) does the same within its flat output: each
+  remainder at its start, the digit encoder (``_encode_multi``) on the
+  multi-slot subset.
 * ``decode_runs`` gathers every run's slots in one pass and reads each
   slot as a count-1 counter.  Only runs holding a non-ascent go through
   the cursor decoder (``_decode_cursor``), on a compact copy of their
@@ -152,7 +156,9 @@ def encode_counters(
     concatenation of each pair's slot sequence and ``lengths[i]`` its length.
     A count-1 counter is its own remainder, so every remainder is written at
     its start and only the ``counts > 1`` subset goes through the digit
-    encoder, whose slot sequences are then scattered into place.
+    encoder, whose slot sequences are then scattered into place.  A batch
+    of only multi-slot counters (what ``Cqf._rebuild`` passes) goes
+    straight to the digit encoder.
     """
     rems = np.ascontiguousarray(remainders, dtype=np.uint64)
     cnts = np.ascontiguousarray(counts, dtype=np.uint64)
@@ -165,6 +171,8 @@ def encode_counters(
     multi = np.flatnonzero(cnts > 1)
     if multi.size == 0:
         return rems.copy(), lengths
+    if multi.size == n:
+        return _encode_multi(rems, cnts, bits_per_slot)
 
     sub_flat, sub_len = _encode_multi(rems[multi], cnts[multi], bits_per_slot)
     lengths[multi] = sub_len
@@ -280,11 +288,12 @@ def decode_runs(
     run_index = np.repeat(np.arange(nruns, dtype=np.int64), lens)
     count = np.ones(v.size, dtype=np.uint64)
 
-    # runs holding a non-ascent need the cursor decoder
+    # runs holding a non-ascent need the cursor decoder; each gathered
+    # slot knows its run, so overlapping runs are told apart too
     non_ascent = np.empty(v.size, dtype=bool)
     np.less_equal(v[1:], v[:-1], out=non_ascent[1:])
     non_ascent[offs] = False  # a run's first slot vs the previous run's last
-    cursor_runs = np.flatnonzero(np.logical_or.reduceat(non_ascent, offs))
+    cursor_runs = np.unique(run_index[non_ascent])
     if cursor_runs.size == 0:
         return run_index, v.astype(np.uint64), count, pos
 

@@ -29,15 +29,17 @@ def murmur64a_u64(keys: np.ndarray, seed: int) -> np.ndarray:
     """
     k = np.ascontiguousarray(keys, dtype=np.uint64)
     init = (seed ^ ((8 * 0xC6A4A7935BD1E995) & 0xFFFFFFFFFFFFFFFF)) & 0xFFFFFFFFFFFFFFFF
-    h = np.full(k.shape, _U64(init), dtype=np.uint64)
-    kk = k * _M
-    kk ^= kk >> _R
-    kk *= _M
-    h ^= kk
+    # one product array and one reused shift temporary; xor commutes, so
+    # ``init ^ mix(k)`` is the reference's ``h ^= k`` on h = init
+    h = np.multiply(k, _M)
+    t = h >> _R
+    h ^= t
     h *= _M
-    h ^= h >> _R
-    h *= _M
-    h ^= h >> _R
+    h ^= _U64(init)
+    for _ in range(2):
+        h *= _M
+        np.right_shift(h, _R, out=t)
+        h ^= t
     return h
 
 

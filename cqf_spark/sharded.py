@@ -30,11 +30,13 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from .aggregator import (
     _cached_sketch,
     ensure_parallelism,
     ensure_shipped,
+    hash_arrow,
     hash_series,
 )
 from .config import CqfConfig
@@ -373,9 +375,12 @@ class ShardedCqf:
         return int(np.sqrt(int(row or 0)))
 
     def count_udf(self, spark: Any):
-        """Broadcast-probe pandas UDF (fits comfortably when the shard set
-        is << executor RAM; at true 10^12 scale use ``count_join``)."""
-        from pyspark.sql.functions import pandas_udf
+        """Broadcast-probe Arrow UDF (fits comfortably when the shard set
+        is << executor RAM; at true 10^12 scale use ``count_join``).  Keys
+        are hashed straight off the Arrow buffers (``hash_arrow``), so a
+        null-bearing long column never goes through float64; null keys
+        read 0."""
+        from pyspark.sql.functions import arrow_udf
         from pyspark.sql.types import LongType
 
         ensure_shipped(spark)
@@ -390,10 +395,10 @@ class ShardedCqf:
         local_mask = np.uint64((1 << int(shift)) - 1)
         vb = config.value_bits
 
-        @pandas_udf(LongType())
-        def _count(keys: pd.Series) -> pd.Series:
+        @arrow_udf(LongType())
+        def _count(keys: pa.Array) -> pa.Array:
             shard_map = bc.value
-            h = hash_series(keys, config)
+            h = hash_arrow(keys, config)
             if vb:
                 h = h << np.uint64(vb)
             shards = (h >> shift).astype(np.int64)
@@ -410,8 +415,9 @@ class ShardedCqf:
                 m = shards == s
                 out[m] = sk.count_hashes(local[m]).astype(np.int64)
             # null keys hash as ""/0 (hashing.py contract: callers mask)
-            out[keys.isna().to_numpy()] = 0
-            return pd.Series(out)
+            if keys.null_count:
+                out[keys.is_null().to_numpy(zero_copy_only=False)] = 0
+            return pa.array(out)
 
         _count._cache = {}  # type: ignore[attr-defined]
         return _count

@@ -132,3 +132,22 @@ def test_sharded_magnitude_matches_single_sketch(spark, sf_dir):
     sharded = ShardedCqf.aggregate(df, "l_suppkey", CFG, n_shards=16)
     single = cqf_aggregate(df, "l_suppkey", CFG)
     assert sharded.magnitude() == single.magnitude()
+
+
+def test_sharded_count_udf_big_long_next_to_null(spark):
+    """A long key float64 cannot hold, probed in a batch that also holds a
+    null, finds what the sharded build stored; the null reads 0."""
+    big = 2**60 + 1
+    cfg = CqfConfig(key_bits=48, hash_mode=HashMode.DEFAULT, seed=7)
+    rows = spark.createDataFrame([(big,), (None,), (7,)], "k long").repartition(1)
+    sharded = ShardedCqf.aggregate(rows, "k", cfg, n_shards=4)
+    try:
+        got = {
+            r.k: r.c
+            for r in rows.select("k", sharded.count_udf(spark)("k").alias("c"))
+            .collect()
+        }
+    finally:
+        sharded.df.unpersist()
+    assert got[big] >= 1 and got[7] >= 1
+    assert got[None] == 0
