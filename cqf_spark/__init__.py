@@ -1,4 +1,4 @@
-"""cqf_spark — PySpark-native counting-quotient-filter + sketch library."""
+"""cqf_spark — PySpark-native counting-quotient-filter library."""
 
 import os
 

@@ -1,10 +1,8 @@
-"""Pure-Python PNG codec (zlib + numpy) — upgrades the image modality
-from declared stub to real decode with zero new dependencies.
+"""Pure-Python PNG codec (zlib + numpy) with zero new dependencies.
 
 Scope: non-interlaced, bit depth 8, color types 0 (grayscale), 2 (RGB)
 and 6 (RGBA) — the shapes a training-data pipeline actually ships after
-normalization.  Palette/16-bit/interlaced inputs raise ``ValueError``
-(callers fall back to the declared stub for non-PNG/unsupported media).
+normalization.  Palette/16-bit/interlaced inputs raise ``ValueError``.
 
 All five scanline filters (None/Sub/Up/Average/Paeth, PNG spec §9) are
 implemented on both sides.  The encoder filters each row with ONE numpy
@@ -12,10 +10,8 @@ expression per filter.  The decoder unfilters None/Sub/Up fully
 vectorized per row (Sub is a per-lane ``cumsum % 256``); Average and
 Paeth have a true left-pixel data dependency, so they walk the row
 column-by-column with all channels of a pixel handled per step — O(w)
-steps per row, each a tiny vector op.  At 100 TB scale the decode runs
-inside Arrow-batched ``mapInPandas`` workers (operators/multimodal.py),
-so per-image cost parallelizes across the cluster; scanline unfiltering
-is inherently sequential per image no matter the library.
+steps per row, each a tiny vector op; scanline unfiltering is
+inherently sequential per image no matter the library.
 """
 
 from __future__ import annotations

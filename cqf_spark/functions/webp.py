@@ -1,13 +1,11 @@
-"""Pure-Python WebP-lossless (VP8L) codec — upgrades the webp image
-modality from declared stub to real decode with zero new dependencies.
+"""Pure-Python WebP-lossless (VP8L) codec with zero new dependencies.
 
 Decoder scope: the full static VP8L feature set — simple and
 length-coded (RLE 16/17/18) huffman codes, the meta-huffman entropy
 image, the color cache, LZ77 backward references with the 120-entry 2D
 distance map, and all four transforms (predictor, cross-color,
 subtract-green, color-indexing incl. sub-byte pixel bundling).  Lossy
-VP8, animation and the extended VP8X container raise ``ValueError``
-(callers fall back to the declared stub).  The decoder accepts
+VP8, animation and the extended VP8X container raise ``ValueError``.  The decoder accepts
 Kraft-incomplete prefix codes (liberal-in-what-you-accept; every
 conformant stream is complete, so this only widens acceptance).
 
@@ -17,8 +15,7 @@ code over at most two lengths (_complete_lengths), so strict
 table-building decoders (libwebp) accept the output, and the
 code-length code is itself complete ({0, L} 1-bit or {0, La, Lb}).  The
 fancier decoder paths (backrefs, cache, transforms, RLE) are pinned by
-hand-built byte-level streams with pen-and-paper pixels in the tests —
-the same discipline as the JPEG codec (functions/jpeg.py).
+hand-built byte-level streams with pen-and-paper pixels in the tests.
 
 Bit order per spec: the stream is LSB-first; huffman codes are read bit
 by bit into the MSB side (code = code<<1 | bit).

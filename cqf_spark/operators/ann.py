@@ -237,70 +237,14 @@ def lsh_topk(
 _PROBE_BROADCAST_ROW_LIMIT = 100_000
 
 
-def _ivf_assign_codegen(
-    c: DataFrame, q: DataFrame, cent_rows: list, nprobe: int, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Literal-centroid assignment/probe: whole-stage-codegen dot products
-    against F.lit arrays.  Plan size grows O(n_cells * dim) — small cell
-    sets only (see :func:`ivf_topk`)."""
-
-    def dot(vec_field: str, mv: list) -> Any:
-        lit = F.array(*[F.lit(float(x)) for x in mv])
-        return F.aggregate(
-            F.zip_with(vec_field, lit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    # assign: argmax over struct(score, cell) — ties to the LARGER cell id
-    # (struct ordering), mirrored in the oracle's ORDER BY score DESC,
-    # cell DESC
-    def scored_structs(vec_field: str) -> Any:
-        return F.array(
-            *[
-                F.struct(
-                    F.round(dot(vec_field, r["mv"]), 4).alias("s"),
-                    F.lit(int(r["cell"])).alias("cell"),
-                )
-                for r in cent_rows
-            ]
-        )
-
-    assigned = c.select(
-        id_col, "cv", F.array_max(scored_structs("cv"))["cell"].alias("cell")
-    )
-
-    # probe: top-nprobe cells per query (rank on rounded score, ties to
-    # larger cell — same ordering as assignment)
-    probe = (
-        q.select(
-            "query_id",
-            "qv",
-            F.explode(scored_structs("qv")).alias("sc"),
-        )
-        .select("query_id", "qv", F.col("sc.s").alias("s"), F.col("sc.cell").alias("cell"))
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("s").desc(), F.col("cell").desc()
-                )
-            ),
-        )
-        .where(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    return assigned, probe
-
-
 def _ivf_assign_udf(
     c: DataFrame, q: DataFrame, cent_rows: list, nprobe: int, id_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Broadcast-matrix assignment/probe: one numpy matmul + arg-top per
     Arrow batch against the broadcast (n_cells, dim) centroid matrix.
 
-    Ordering is identical to the codegen path: scores round half-up to 4
-    decimals (Spark's ROUND), ties break to the larger cell id.  The
+    Scores round half-up to 4 decimals (Spark's ROUND) and ties break to
+    the larger cell id, the order the SQL oracle mirrors.  The
     composite sort key ``score_i * n_cells + ascending-cell-rank`` encodes
     exactly that order in one int64, so argmax/argsort need no tie logic.
     """
@@ -364,17 +308,16 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_via_udf: bool | None = None,
     broadcast_probe: bool | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN top-k — the cell-partitioned scale path.
 
-    * **Assign** (map-side, no shuffle): every corpus row scores against
-      the broadcast centroid set with codegen ``zip_with``/``aggregate``
-      dot products and takes its cell via ``array_max`` over
-      ``struct(score, cell)`` — one pass, no key shuffle, O(n * n_cells * d)
-      flops in whole-stage codegen.  At 100 TB this is the same cost shape
-      as reading the data once.
+    * **Assign** (map-side, no shuffle): the (n_cells, dim) centroid
+      matrix is broadcast ONCE as numpy, and each Arrow batch of corpus
+      rows takes its cell with a single matmul + argmax — one pass, no
+      key shuffle, O(n * n_cells * d) flops, and a plan whose size does
+      not grow with the cell count.  At 100 TB this is the same cost
+      shape as reading the data once.
     * **Probe**: each query ranks the same centroid set and keeps its top
       ``nprobe`` cells; candidates are corpus rows assigned to any probed
       cell — a join on the (tiny) cell id, so ~nprobe/n_cells of the
@@ -388,21 +331,6 @@ def ivf_topk(
     (the tolerance the brute-force oracle has already proven sufficient).
     Returns (query_id, rank, vec_id, cos).
 
-    Two interchangeable assignment engines (identical results, proven by
-    unit test):
-
-    * pandas UDF (the r6 auto default at EVERY cell count): the
-      (n_cells, dim) centroid matrix is broadcast ONCE as numpy; each
-      Arrow batch does a single matmul + arg-top.  Still map-side, still
-      zero corpus shuffle — the plan stays O(1) regardless of cell count.
-      Measured 7x faster than the codegen twin even at 16 cells x 64
-      dims (the literal expression tree pays both plan construction and
-      per-row interpreted HOF evaluation).
-    * codegen (``assign_via_udf=False``): every centroid is embedded as
-      dim ``F.lit`` doubles — whole-stage-codegen dot products, zero
-      Python, but the Catalyst plan itself is O(n_cells * dim)
-      expressions.  Kept for parity tests and zero-Python deployments.
-
     ``broadcast_probe`` (None = auto): interactive query sets broadcast
     the exploded (query, cell) probe side so the corpus never shuffles;
     batch retrieval past ~1e5 probe rows switches to a shuffle join on
@@ -412,16 +340,6 @@ def ivf_topk(
         F.col(id_col).alias("cell"), F.col("_unit").alias("mv")
     )
     cent_rows = cent.collect()  # n_cells rows — tiny by construction
-    if assign_via_udf is None:
-        # r6: the broadcast-matmul engine wins at EVERY measured cell
-        # count, not just past the old >256 plan-size cutoff — at 16
-        # cells x 64 dims the codegen engine took 7x longer end to end
-        # (the O(n_cells*dim) literal expression tree pays both plan
-        # construction and per-row interpreted HOF evaluation), so auto
-        # now always picks the UDF engine; pass ``assign_via_udf=False``
-        # explicitly to force the codegen twin (kept for parity tests
-        # and zero-Python deployments)
-        assign_via_udf = True
     c = with_unit_vectors(corpus, vec_col).select(
         F.col(id_col), F.col("_unit").alias("cv")
     )
@@ -440,10 +358,7 @@ def ivf_topk(
         cap = 1 + _PROBE_BROADCAST_ROW_LIMIT // max(nprobe, 1)
         broadcast_probe = queries.limit(cap).count() < cap
 
-    if assign_via_udf:
-        assigned, probe = _ivf_assign_udf(c, q, cent_rows, nprobe, id_col)
-    else:
-        assigned, probe = _ivf_assign_codegen(c, q, cent_rows, nprobe, id_col)
+    assigned, probe = _ivf_assign_udf(c, q, cent_rows, nprobe, id_col)
 
     # probe side = n_queries * nprobe dim-wide rows.  Broadcast it only
     # for interactive-sized query sets; batch retrieval over millions of

@@ -463,7 +463,7 @@ def q_strip_boilerplate(spark: "SparkSession", sf_dir: str) -> DataFrame:
     return strip_boilerplate(planted, min_doc_frac=_BP_FRAC)
 
 
-CLEANING_EXTRA_ORACLES: dict[str, str] = {
+CLEANING_ORACLES: dict[str, str] = {
     "clean_strip_boilerplate": f"""
 WITH planted AS (
   SELECT doc_id, concat_ws(chr(10), text,
@@ -498,6 +498,6 @@ FROM lns CROSS JOIN freq f
 """,
 }
 
-CLEANING_EXTRA_QUERIES = {
+CLEANING_QUERIES = {
     "clean_strip_boilerplate": q_strip_boilerplate,
 }

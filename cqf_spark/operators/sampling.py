@@ -162,46 +162,6 @@ def cap_per_group(
     )
 
 
-def quantile_threshold_filter(
-    docs: DataFrame,
-    score_col: str,
-    q: float,
-    keep: str = "above",
-    k: int = 400,
-) -> tuple[DataFrame, float]:
-    """Filter at a GLOBAL score quantile without a global sort: one
-    mergeable-KLL pass (map-side partials, blob-only shuffle — the same
-    topology as every sketch build here) finds the value at rank ``q``,
-    then the filter is a scan-local codegen predicate.  This is the
-    100 TB form of "drop the worst decile by quality score": the exact
-    alternatives either total-sort the corpus (orderBy + row_number) or
-    centralize per-partition percentiles whose combination has no error
-    bound; KLL's rank error is a published O(1/k) with two-sided
-    guarantees (Karnin-Lang-Liberty, FOCS 2016), so the kept fraction is
-    (1-q) +/- eps_k by construction.
-
-    ``keep="above"`` keeps ``score >= cutoff`` (drop the bottom q);
-    ``keep="below"`` keeps ``score <= cutoff`` (drop the top 1-q).
-    Returns ``(filtered_docs, cutoff)`` — the cutoff is computed eagerly
-    (one Spark job), the filter stays lazy.
-    """
-    import numpy as np
-
-    from ..sketches.harness import sketch_aggregate
-    from ..sketches.kll import KllSketch
-
-    if not 0.0 < q < 1.0:
-        raise ValueError(f"q must be in (0, 1), got {q}")
-    if keep not in ("above", "below"):
-        raise ValueError(f"keep must be 'above' or 'below', got {keep!r}")
-    kll = sketch_aggregate(
-        docs, score_col, lambda: KllSketch(k), kind="numeric"
-    )
-    cut = float(np.asarray(kll.quantile(np.array([q])))[0])
-    op = F.col(score_col) >= cut if keep == "above" else F.col(score_col) <= cut
-    return docs.where(op), cut
-
-
 def temperature_rates(
     counts: dict,
     temperature: float,

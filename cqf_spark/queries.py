@@ -194,19 +194,6 @@ def q_kv_store_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SURVEY §2.4 metadata aggregates
 # --------------------------------------------------------------------- #
 
-def q_sum_of_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """qf_get_sum_of_counts == exact stream length (src/gqf.c:2173)."""
-    sketch = cqf_aggregate(load(spark, sf_dir, "lineitem"), "l_partkey", INT_CONFIG)
-    return spark.createDataFrame([(sketch.sum_of_counts,)], "n long")
-
-
-def q_ndistinct_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """qf_get_num_distinct_key_value_pairs (src/gqf.c:2177) — exact in
-    INVERTIBLE mode (bijective hash, no collisions)."""
-    sketch = cqf_aggregate(load(spark, sf_dir, "lineitem"), "l_partkey", INT_CONFIG)
-    return spark.createDataFrame([(sketch.num_distinct,)], "n long")
-
-
 def q_sketch_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §2.4/§2.6 whole-sketch scalars off ONE build:
     qf_get_sum_of_counts (src/gqf.c:2173),
@@ -234,7 +221,8 @@ def _event_sketch(spark: SparkSession, sf_dir: str, etype: str):
 
 def q_inner_product_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """qf_inner_product (src/gqf.c:2547): sum(count_click * count_view).
-    Both sketches come from ONE scan via the grouped builder."""
+    Both sketches come from ONE scan via the grouped builder, fed the raw
+    event rows (no ``count_col``): the gate row for that build path."""
     from .aggregator import build_sketches_grouped
     from .core import Cqf
 
@@ -251,16 +239,12 @@ def q_inner_product_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame([(ip,)], "ip long")
 
 
-def q_magnitude_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """qf_magnitude (src/gqf.c:2616): floor(sqrt(sum count^2))."""
-    sketch = cqf_aggregate(load(spark, sf_dir, "lineitem"), "l_partkey", INT_CONFIG)
-    return spark.createDataFrame([(sketch.magnitude(),)], "magnitude long")
-
-
 def q_intersect_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """qf_intersect (src/gqf.c:2583): users present in both event streams;
     INVERTIBLE hashes are un-hashed back to the original user_ids
-    (hash_64i, src/hashutil.c:146-181)."""
+    (hash_64i, src/hashutil.c:146-181).  Each side is a plain
+    ``cqf_aggregate`` over the raw stream, which counts it in the JVM
+    first."""
     a = _event_sketch(spark, sf_dir, "click")
     b = _event_sketch(spark, sf_dir, "purchase")
     inter = a.intersect(b)
@@ -276,8 +260,8 @@ def q_set_algebra_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both event streams, plus one ('inner_product', ip) row — both
     operators stay fully value-checked.  All THREE per-type sketches
     (click/purchase/view) come from ONE grouped-build scan of events —
-    the plan the standalone q_intersect_users/q_inner_product_events
-    pair would pay three scans for."""
+    the two operators that :func:`q_intersect_users` and
+    :func:`q_inner_product_events` gate one at a time, in three scans."""
     from .aggregator import build_sketches_grouped
     from .core import Cqf
 
@@ -784,6 +768,8 @@ SKETCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cqf_streaming_token_counts": q_streaming_token_counts,
     "cqf_streaming_grouped_lang": q_streaming_grouped_lang,
     "dedup_streaming_exact": q_streaming_exact_dedup,
+    "cqf_intersect_users": q_intersect_users,
+    "cqf_inner_product_events": q_inner_product_events,
 }
 
 SKETCH_ORACLES: dict[str, str] = {
@@ -896,5 +882,18 @@ SKETCH_ORACLES: dict[str, str] = {
     "cqf_grouped_sketch_stats": (
         "SELECT event_type, COUNT(*) AS n_events, "
         "COUNT(DISTINCT user_id) AS n_users FROM events GROUP BY event_type"
+    ),
+    "cqf_intersect_users": (
+        "SELECT user_id FROM ("
+        "SELECT DISTINCT user_id FROM events WHERE event_type = 'click' "
+        "INTERSECT "
+        "SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')"
+    ),
+    "cqf_inner_product_events": (
+        "SELECT CAST(COALESCE(SUM(a.c * b.c), 0) AS BIGINT) AS ip FROM "
+        "(SELECT user_id, COUNT(*) AS c FROM events "
+        "WHERE event_type = 'click' GROUP BY user_id) a JOIN "
+        "(SELECT user_id, COUNT(*) AS c FROM events "
+        "WHERE event_type = 'view' GROUP BY user_id) b USING (user_id)"
     ),
 }

@@ -50,12 +50,13 @@ from typing import Any, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..aggregator import (
     _cached_sketch,
     build_sketches_grouped,
     ensure_shipped,
-    hash_series,
+    hash_arrow,
     tree_merge,
 )
 from ..config import CqfConfig, HashMode
@@ -92,17 +93,18 @@ def _load_meta(index_dir: str) -> dict[str, Any]:
     return meta
 
 
-def _probe_hashes(keys: Sequence[Any], config: CqfConfig) -> np.ndarray:
-    """Hash the probe list once, driver-side (the list is small by
-    contract), value-packed the way build_sketches packs content."""
-    ser = pd.Series(list(keys))
-    ser = ser[~ser.isna()]
-    if ser.empty:
-        return np.zeros(0, dtype=np.uint64)
-    h = hash_series(ser, config)
-    if config.value_bits:
-        h = h << np.uint64(config.value_bits)
-    return np.unique(h)
+def _probe_hashes(
+    keys: Sequence[Any], config: CqfConfig
+) -> tuple[pa.Array, np.ndarray]:
+    """The probe list (small by contract) with nulls and NaN dropped, and
+    its hashes, value-packed the way build_sketches packs content.  The
+    list goes through Arrow, which keeps a null-bearing integer list
+    int64; a pandas Series of it would be float64 and lose the low bits
+    of keys at or above 2**53."""
+    arr = pa.array(list(keys), from_pandas=True).drop_null()
+    if len(arr) == 0:
+        return arr, np.zeros(0, dtype=np.uint64)
+    return arr, hash_arrow(arr, config) << np.uint64(config.value_bits)
 
 
 def build_index(
@@ -194,7 +196,7 @@ def prune_files(
     """
     meta = _load_meta(index_dir)
     config: CqfConfig = meta["config"]
-    h = _probe_hashes(keys, config)
+    h = np.unique(_probe_hashes(keys, config)[1])
     ensure_shipped(spark)
     idx = spark.read.parquet(_sketches_path(index_dir)).select(
         "file", "sketch"
@@ -272,12 +274,8 @@ def key_counts_by_file(
     """
     meta = _load_meta(index_dir)
     config: CqfConfig = meta["config"]
-    probe = [k for k in keys if k is not None]
-    ser = pd.Series(probe)
-    h = hash_series(ser, config) if probe else np.zeros(0, np.uint64)
-    if config.value_bits:
-        h = h << np.uint64(config.value_bits)
-    key_strs = [str(k) for k in probe]
+    probe, h = _probe_hashes(keys, config)
+    key_strs = [str(k) for k in probe.to_pylist()]
     ensure_shipped(spark)
     idx = spark.read.parquet(_sketches_path(index_dir)).select(
         "file", "sketch"

@@ -252,113 +252,3 @@ def grouped_streaming_sketches(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def grouped_streaming_sketches_tws(
-    stream_df: Any,
-    group_col: str,
-    key_col: str,
-    config: CqfConfig,
-    compact_fraction: float = _COMPACT_FRACTION,
-) -> Any:
-    """:func:`grouped_streaming_sketches` on Spark 4's
-    ``transformWithStateInPandas`` (the arbitrary-stateful-processing API
-    that supersedes ``applyInPandasWithState``): the per-group LSM pair
-    lives in a named ``ValueState`` inside the engine's RocksDB state
-    store, which gives incremental changelog checkpointing and state
-    that scales past executor memory — the right backend for 10^12-key
-    grouped state at 100 TB.
-
-    Same monoid, same amortized cost model, same output contract as the
-    applyInPandasWithState twin (one (group, sketch, nelts, ndistinct)
-    row per touched group per micro-batch); a parity unit test asserts
-    the two operators' results equal.  **EXPERIMENTAL**: that parity
-    test auto-skips in this sandbox (no protobuf — see the ENVIRONMENT
-    NOTE below), so this path has not yet executed anywhere the suite
-    has run; treat it as unverified until the parity test has passed
-    once on a protobuf-provisioned cluster.  Requires the RocksDB state
-    store provider (bundled with Spark 4):
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-
-    ENVIRONMENT NOTE: transformWithStateInPandas's Python state-server
-    protocol additionally needs the ``protobuf`` package (a pyspark
-    extra) in the worker env.  This sandbox has no protobuf and installs
-    are barred, so the parity test auto-skips here and
-    :func:`grouped_streaming_sketches` (no protobuf dependency) is the
-    locally-gated path; on a normally-provisioned cluster
-    (``pip install "pyspark[connect]"`` or plain ``protobuf``) this
-    operator is the preferred one — RocksDB changelog checkpoints beat
-    HDFS-backed full-snapshot state at 10^12-key scale.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        BinaryType,
-        StructField,
-        StructType,
-    )
-
-    from .aggregator import hash_series
-
-    class SketchLsmProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._lsm = handle.getValueState(
-                "lsm",
-                StructType(
-                    [
-                        StructField("base", BinaryType()),
-                        StructField("delta", BinaryType()),
-                    ]
-                ),
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            chunks = []
-            for pdf in rows:
-                if len(pdf):
-                    chunks.append(hash_series(pdf[key_col], config))
-            if chunks:
-                batch = Cqf.from_hashes(config, np.concatenate(chunks))
-            else:
-                batch = Cqf.empty(config, 6)
-            if self._lsm.exists():
-                base_b, delta_b = self._lsm.get()
-                base = Cqf.from_bytes(bytes(base_b))
-                delta = Cqf.from_bytes(bytes(delta_b))
-            else:
-                base = Cqf.empty(config, 6)
-                delta = Cqf.empty(config, 6)
-            delta = delta.merge(batch)
-            if delta.ndistinct > compact_fraction * max(base.ndistinct, 1):
-                base, delta = base.merge(delta), Cqf.empty(config, 6)
-            self._lsm.update((base.to_bytes(), delta.to_bytes()))
-            merged = base.merge(delta)
-            yield pd.DataFrame(
-                {
-                    "group": [key[0]],
-                    "sketch": [merged.to_bytes()],
-                    "nelts": [merged.nelts],
-                    "ndistinct": [merged.ndistinct],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    _gtype = dict(stream_df.dtypes)[group_col]
-    return stream_df.groupBy(group_col).transformWithStateInPandas(
-        statefulProcessor=SketchLsmProcessor(),
-        outputStructType=(
-            f"group {_gtype}, sketch binary, nelts long, ndistinct long"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -185,28 +185,6 @@ def test_lsh_plans_single_corpus_python_stage(spark):
 
 
 # --------------------------------------------------------------------- #
-# IVF assignment engines agree (VERDICT r02 #6)
-# --------------------------------------------------------------------- #
-
-def test_ivf_udf_assignment_matches_codegen(spark):
-    from cqf_spark.operators.ann import ivf_topk
-
-    corpus = _vec_df(spark, n=60, dim=8, seed=9)
-    centroids = corpus.where(F.col("vec_id") < 6)
-    queries = corpus.where(F.col("vec_id").isin([10, 20, 30]))
-
-    def run(via_udf):
-        rows = ivf_topk(
-            corpus, queries, centroids, k=5, nprobe=2, assign_via_udf=via_udf
-        ).collect()
-        return sorted(
-            (r.query_id, r.rank, r.vec_id, round(r.cos, 4)) for r in rows
-        )
-
-    assert run(True) == run(False)
-
-
-# --------------------------------------------------------------------- #
 # file-backed resize rotation (qf_resize_file, gqf_file.c:170-228)
 # --------------------------------------------------------------------- #
 

@@ -1452,48 +1452,6 @@ def test_streaming_int_group_column(spark, tmp_path):
 
 
 # ------------------------------------------------------------------ #
-# quantile_threshold_filter — global cutoff without a global sort
-# ------------------------------------------------------------------ #
-
-def test_quantile_threshold_filter_bound_and_plan(spark, sf_dir):
-    from cqf_spark.operators.sampling import quantile_threshold_filter
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n = li.count()
-    kept, cut = quantile_threshold_filter(
-        li, "l_extendedprice", 0.25, keep="above", k=400
-    )
-    # the cutoff's EXACT rank must sit within the KLL error of q
-    vals = li.select("l_extendedprice").toPandas()["l_extendedprice"]
-    assert abs((vals < cut).mean() - 0.25) <= 0.05
-    assert abs(kept.count() / n - 0.75) <= 0.05
-    # deterministic: same input -> same sketch -> same cutoff
-    below, cut2 = quantile_threshold_filter(
-        li, "l_extendedprice", 0.25, keep="below", k=400
-    )
-    assert cut2 == pytest.approx(cut)
-    # above/below overlap only at exact-cutoff rows
-    assert kept.count() + below.count() >= n
-    # the filter itself is scan-local and PUSHED into the parquet scan
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = kept._jdf.queryExecution().explainString(mode)
-    assert "Exchange" not in plan, plan
-    assert "GreaterThanOrEqual(l_extendedprice" in plan, plan
-
-
-def test_quantile_threshold_filter_validation(spark, sf_dir):
-    from cqf_spark.operators.sampling import quantile_threshold_filter
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    with pytest.raises(ValueError, match="q must be"):
-        quantile_threshold_filter(li, "l_extendedprice", 1.5)
-    with pytest.raises(ValueError, match="keep must be"):
-        quantile_threshold_filter(li, "l_extendedprice", 0.5, keep="top")
-
-
-# ------------------------------------------------------------------ #
 # semantic_dedup (SemDedup, arXiv:2303.09540) — cluster-then-prune
 # ------------------------------------------------------------------ #
 

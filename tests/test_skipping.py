@@ -150,3 +150,25 @@ def test_empty_probe_list(dataset):
     spark = dataset["spark"]
     got = read_pruned(spark, dataset["data"], dataset["idx"], [])
     assert got.count() == 0
+
+
+def test_null_in_probe_list_keeps_large_int_keys(spark, tmp_path):
+    """A null next to a key at or above 2**53 must not change the key's
+    hash: a float64 detour would probe 2**60 instead of 2**60 + 1, skip
+    the only file holding it and lose its row."""
+    big = 2**60 + 1
+    data, idx = str(tmp_path / "data"), str(tmp_path / "index")
+    spark.createDataFrame([(big,), (7,)], "k long").coalesce(1).write.parquet(
+        data
+    )
+    assert build_index(spark, data, "k", idx, CFG) == 1
+    for keys in ([big], [big, None], [None, big, 7]):
+        plan = prune_files(spark, idx, keys, data_path=data)
+        assert (len(plan["read"]), len(plan["skipped"])) == (1, 0), keys
+        got = read_pruned(spark, data, idx, keys)
+        assert big in {r["k"] for r in got.collect()}, keys
+        counts = {
+            r["key"]: r["count"]
+            for r in key_counts_by_file(spark, idx, keys).collect()
+        }
+        assert counts.get(str(big)) == 1, (keys, counts)

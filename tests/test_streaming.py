@@ -169,82 +169,3 @@ def test_grouped_streaming_sketches_match_batch(spark, tmp_path):
         assert np.array_equal(kh_g, kh_w) and np.array_equal(c_g, c_w), g
         assert r["nelts"] == want[g].nelts
 
-
-def test_grouped_streaming_tws_matches_apply_in_pandas(spark, tmp_path):
-    """transformWithStateInPandas (RocksDB ValueState) and
-    applyInPandasWithState must produce identical per-group final
-    sketches — same LSM monoid through two engine state backends.
-
-    Skips where the pyspark transformWithState worker protocol's
-    ``protobuf`` dependency is absent (this sandbox; see the operator's
-    ENVIRONMENT NOTE)."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf in the worker env",
-    )
-    import pandas as pd
-
-    from cqf_spark.core import Cqf
-    from cqf_spark.streaming import (
-        grouped_streaming_sketches,
-        grouped_streaming_sketches_tws,
-    )
-
-    src = str(tmp_path / "twssrc")
-    rng = np.random.default_rng(23)
-    for _ in range(3):
-        pdf = pd.DataFrame(
-            {
-                "g": rng.choice(["x", "y"], 2000),
-                "k": rng.integers(0, 300, 2000),
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-
-    def drain(op, name, ckpt):
-        stream = (
-            spark.readStream.schema("g string, k long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            op(stream, "g", "k", CFG)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        latest = {}
-        for r in spark.sql(f"select * from {name}").collect():
-            latest[r["group"]] = bytes(r["sketch"])
-        return latest
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        tws = drain(grouped_streaming_sketches_tws, "tws_sink", "tws_ckpt")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    aip = drain(grouped_streaming_sketches, "aip_sink", "aip_ckpt")
-    assert set(tws) == set(aip) == {"x", "y"}
-    for g in tws:
-        a, b = Cqf.from_bytes(tws[g]), Cqf.from_bytes(aip[g])
-        kh_a, _, c_a = a.items()
-        kh_b, _, c_b = b.items()
-        assert np.array_equal(kh_a, kh_b) and np.array_equal(c_a, c_b), g

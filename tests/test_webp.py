@@ -452,11 +452,3 @@ def test_read_code_rle_paths():
     # decoding just needs the map to hold symbols 0..3
     assert sorted(code.map.values()) == [0, 1, 2, 3]
 
-
-def test_spark_media_dispatch_decodes_webp(spark):
-    """extract_features sees VP8L bytes as a real image."""
-    from cqf_spark.operators.multimodal import decode_image
-
-    img = _rand_img(5, 4, 3, seed=1)
-    arr = decode_image(encode_webp_lossless(img), 4, 5, strict=True)
-    assert (arr[:, :, :3] == img).all()
