@@ -18,11 +18,13 @@ exact-Jaccard oracle at that ~5e-8 per-pair rate.
 in ONE ``select`` over the scan (no doc_id self-joins — whole-stage
 codegen map work); MinHash signatures are partition-local (shingles
 never shuffle); the banded candidate join touches only colliding
-buckets; and the final keep/drop is a plain anti-join on the dropped-id
-set with NO forced broadcast — web-crawl dup rates of 20-40% make the
-drop set corpus-proportional, so AQE picks broadcast only when the
-runtime size allows it.  No stage shuffles raw text except the band
-join of the deduped SUBSET's signatures.
+buckets; each candidate pair is verified by joining it to its two texts
+and intersecting their shingle arrays in one codegen ``select``; and the
+final keep/drop is a plain anti-join on the dropped-id set with NO
+forced broadcast — web-crawl dup rates of 20-40% make the drop set
+corpus-proportional, so AQE picks broadcast only when the runtime size
+allows it.  Raw text reaches an exchange only in the input repartition
+and in the two verify joins, which look each candidate's texts up by id.
 """
 
 from __future__ import annotations

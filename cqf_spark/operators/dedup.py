@@ -24,7 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..aggregator import ensure_shipped
@@ -140,14 +140,14 @@ def lsh_candidate_pairs(
     )
 
 
-def shingle_df(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Distinct (id, shingle) rows via native array ops (codegen).
-    Docs with < n tokens produce no shingles — matching both the MinHash
-    signature path and the SQL oracle's range() (ADVICE r01)."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.when(
+def shingle_array(text: Column, n: int = 3) -> Column:
+    """The distinct word n-grams of ``text`` as one array<string>: split on
+    single spaces, n-grams joined by one space (the SQL oracle's
+    ``string_split(text, ' ')`` rule).  Docs with < n tokens give an empty
+    array — matching both the MinHash signature path and the oracle's
+    range() (ADVICE r01)."""
+    toks = F.split(text, " ")
+    return F.when(
         F.size(toks) >= n,
         F.array_distinct(
             F.transform(
@@ -156,7 +156,16 @@ def shingle_df(
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return docs.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
+
+
+def shingle_df(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """Distinct (id, shingle) rows via native array ops (codegen)."""
+    return docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(shingle_array(F.col(text_col), n)).alias("g"),
+    )
 
 
 def exact_jaccard_pairs(
@@ -421,58 +430,44 @@ def minhash_dedup_pairs(
     pairs -> EXACT Jaccard verification of candidates only (the standard
     'verify survivors' discipline).  Output (i, j, jac >= threshold).
 
-    r6 plan shape (guide §2.4/§3.2): the signature frame and the candidate
-    pairs are persisted — the band self-join otherwise re-ran the whole
-    signature MapInPandas once per side, and the candidate-id semi-join
-    below re-ran the self-join itself.  Shingle verification only ever
-    touches docs that appear in some candidate pair, so the exact-Jaccard
-    explode is SEMI-JOINED down to those ids before any shingle is built
-    (the verify joins keyed on i/j already discarded every other doc —
-    restricting the input is result-identical, it just stops exploding
-    shingles for docs no candidate references).  Candidates are a
-    vanishing fraction of the corpus at real dup rates, so at 100 TB this
-    turns the verify from a corpus-wide explode into one proportional to
-    the duplicate set."""
+    Docs with fewer than ``shingle_n`` tokens are dropped first: they have
+    no shingle, so they pair with nothing, yet their all-sentinel
+    signatures would collide in every band (k of them cost k(k-1)/2
+    candidates).  The signature frame is persisted because the band
+    self-join reads it on both sides.  Verification joins each candidate
+    (i, j) to its two texts and compares the two distinct-shingle arrays
+    in one codegen ``select`` (``array_intersect``): the strings are
+    compared exactly, no shingle row is exploded and no Python runs.  No
+    broadcast hint on the text side: it is the corpus, so AQE picks the
+    join strategy from runtime sizes."""
+    toks = F.split(F.col(text_col), " ")
+    docs = docs.select(id_col, text_col).where(F.size(toks) >= shingle_n)
     sigs = minhash_signatures(
         docs, id_col, text_col, num_perm, shingle_n, seed
     ).persist()
-    cand = lsh_candidate_pairs(sigs, id_col, num_perm, bands).persist()
-    cand_ids = (
-        cand.select(F.col("i").alias(id_col))
-        .union(cand.select(F.col("j").alias(id_col)))
-        .distinct()
-    )
-    # no broadcast hint: candidate ids are corpus-proportional at real
-    # crawl dup rates (20-40%), so AQE must pick the strategy from the
-    # runtime size — the same discipline as curation's drop-set anti-join
-    docs_c = docs.join(cand_ids, id_col, "semi")
-    # persist the candidate shingles: FOUR subtrees consume them (both
-    # verify-join sides + both size lookups), so without this the
-    # semi-join + explode re-ran four times; the frame is proportional
-    # to the candidate set (the duplicate sliver), not the corpus
-    sh = shingle_df(docs_c, id_col, text_col, shingle_n).persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("id").alias("i"), F.col("g"))
-    b = sh.select(F.col("id").alias("j"), F.col("g"))
-    inter = (
-        cand.join(a, "i").join(b, ["j", "g"]).groupBy("i", "j").agg(
-            F.count("*").alias("inter")
+    cand = lsh_candidate_pairs(sigs, id_col, num_perm, bands)
+
+    def text_as(side: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(side), F.col(text_col).alias(f"t{side}")
         )
+
+    grams = cand.join(text_as("i"), "i").join(text_as("j"), "j").select(
+        "i",
+        "j",
+        shingle_array(F.col("ti"), shingle_n).alias("ga"),
+        shingle_array(F.col("tj"), shingle_n).alias("gb"),
     )
-    sa = sizes.select(F.col("id").alias("i"), F.col("sz").alias("na"))
-    sb = sizes.select(F.col("id").alias("j"), F.col("sz").alias("nb"))
-    return (
-        inter.join(F.broadcast(sa), "i")
-        .join(F.broadcast(sb), "j")
-        .select(
-            "i",
-            "j",
-            (
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-            ).alias("jac"),
-        )
-        .where(F.col("jac") >= threshold)
+    sizes = grams.select(
+        "i",
+        "j",
+        F.size(F.array_intersect("ga", "gb")).alias("inter"),
+        (F.size("ga") + F.size("gb")).alias("n"),
     )
+    inter = F.col("inter")
+    return sizes.select(
+        "i", "j", F.when(inter > 0, inter / (F.col("n") - inter)).alias("jac")
+    ).where(F.col("jac") >= threshold)
 
 
 # ------------------------------------------------------------------ #

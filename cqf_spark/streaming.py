@@ -38,7 +38,7 @@ import os
 import struct
 from typing import Any
 
-from .aggregator import build_sketches, tree_merge
+from .aggregator import build_sketches, ensure_shipped, tree_merge
 from .config import CqfConfig
 from .core import Cqf
 
@@ -200,6 +200,10 @@ def grouped_streaming_sketches(
     by each micro-batch (output mode "update"), where ``sketch`` is the
     merged base ⊎ delta view.  At very high update rates emit metadata
     only and read blobs from the state store at compaction points.
+
+    Null keys are dropped before the state operator, so every batch
+    reaches pandas as int64 and long keys hash exactly (a null-bearing
+    integer column would arrive as float64).
     """
     import pandas as pd
 
@@ -242,7 +246,9 @@ def grouped_streaming_sketches(
     # group dtype follows the input column (an int group column would
     # fail Arrow conversion against a hardcoded string field)
     _gtype = dict(stream_df.dtypes)[group_col]
-    return stream_df.groupBy(group_col).applyInPandasWithState(
+    ensure_shipped(stream_df.sparkSession)
+    keyed = stream_df.where(stream_df[key_col].isNotNull())
+    return keyed.groupBy(group_col).applyInPandasWithState(
         update,
         outputStructType=(
             f"group {_gtype}, sketch binary, nelts long, ndistinct long"

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from .aggregator import ensure_shipped
+
 # --------------------------------------------------------------------- #
 # synthesis: documents -> (url, warc_ts, html, text, lang)
 # --------------------------------------------------------------------- #
@@ -219,6 +221,7 @@ def with_extracted_text(
         if f.name != "html"
     ) + f", {out_col} string"
     names = [f.name for f in pages.schema.fields if f.name != "html"]
+    ensure_shipped(pages.sparkSession)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -281,7 +284,6 @@ def build_token_sketches(pages: DataFrame, config):
     import numpy as np
     import pandas as pd
 
-    from .aggregator import ensure_shipped
     from .core import Cqf
     from .functions.hashing import murmur64a_concat
 

@@ -46,6 +46,59 @@ def test_minhash_estimates_jaccard(spark):
     assert abs(est - true) < 0.15
 
 
+def _spy_candidates(monkeypatch):
+    """Record every candidate frame ``minhash_dedup_pairs`` verifies."""
+    from cqf_spark.operators import dedup
+
+    seen = []
+    band = dedup.lsh_candidate_pairs
+
+    def spy(*args, **kwargs):
+        seen.append(band(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(dedup, "lsh_candidate_pairs", spy)
+    return seen
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.8])
+def test_minhash_verify_equals_exact_jaccard_on_candidates(
+    spark, sf_dir, monkeypatch, threshold
+):
+    """The verified pairs are exactly the exhaustive Jaccard pairs that
+    the bands proposed, with bit-identical jac."""
+    from cqf_spark.operators.dedup import exact_jaccard_pairs, minhash_dedup_pairs
+
+    seen = _spy_candidates(monkeypatch)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    got = _sorted_rows(minhash_dedup_pairs(docs, threshold=threshold))
+    (cand,) = seen
+    exact = exact_jaccard_pairs(docs, threshold=threshold).join(cand, ["i", "j"])
+    want = _sorted_rows(exact.select("i", "j", "jac"))
+    assert got == want
+    assert got
+
+
+def test_minhash_skips_docs_without_shingles(spark, monkeypatch):
+    """Docs shorter than one shingle all share the sentinel signature;
+    they must not reach the band join, where k of them would pair
+    k(k-1)/2 ways (and the verify must not divide by zero)."""
+    from cqf_spark.operators.dedup import exact_jaccard_pairs, minhash_dedup_pairs
+
+    seen = _spy_candidates(monkeypatch)
+    dup = "the quick brown fox jumps over"
+    rows = [(k, f"w{k}") for k in range(200)] + [(1000, dup), (1001, dup)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = _sorted_rows(minhash_dedup_pairs(docs))
+    (cand,) = seen
+    assert _sorted_rows(cand) == [(1000, 1001)]
+    assert got == _sorted_rows(exact_jaccard_pairs(docs)) == [(1000, 1001, 1.0)]
+
+
 def test_simhash_close_for_near_dups(spark):
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     b = a.replace("gamma", "gammo", 1)
@@ -186,24 +239,46 @@ def test_ivf_probes_subset_of_cells(spark):
 # shipping the package to executors
 # --------------------------------------------------------------------- #
 
+def _streaming_args(spark):
+    from cqf_spark.queries import INT_CONFIG
+
+    rate = spark.readStream.format("rate").load()
+    keys = rate.select(F.lit("a").alias("g"), F.col("value").alias("k"))
+    return keys, "g", "k", INT_CONFIG
+
+
+# builders outside cqf_spark.operators, with the arguments they take
+_TOP_LEVEL_BUILDERS = {
+    "webtext.with_extracted_text": lambda spark: (
+        spark.createDataFrame([(1, "<p>x y</p>")], "doc_id long, html string"),
+    ),
+    "streaming.grouped_streaming_sketches": _streaming_args,
+}
+
+
 @pytest.mark.parametrize("builder", [
     "dedup.minhash_signatures",
     "dedup.simhash_signatures",
     "dedup.simhash_signatures_wide",
     "text_queries.fingerprints",
     "text_queries._fingerprints_keep",
+    *_TOP_LEVEL_BUILDERS,
 ])
 def test_map_in_pandas_builders_ship_the_package(spark, monkeypatch, builder):
-    """Every mapInPandas builder ships cqf_spark first, so a session
+    """Every Python-worker builder ships cqf_spark first, so a session
     started outside the repo root can unpickle its closures."""
     modname, fname = builder.split(".")
-    mod = importlib.import_module(f"cqf_spark.operators.{modname}")
+    if builder in _TOP_LEVEL_BUILDERS:
+        mod = importlib.import_module(f"cqf_spark.{modname}")
+        args = _TOP_LEVEL_BUILDERS[builder](spark)
+    else:
+        mod = importlib.import_module(f"cqf_spark.operators.{modname}")
+        args = (spark.createDataFrame(
+            [(1, "a", "x y z")], "doc_id long, variant string, text string"
+        ),)
     calls = []
     monkeypatch.setattr(mod, "ensure_shipped", calls.append)
-    docs = spark.createDataFrame(
-        [(1, "a", "x y z")], "doc_id long, variant string, text string"
-    )
-    getattr(mod, fname)(docs)
+    getattr(mod, fname)(*args)
     assert calls == [spark]
 
 

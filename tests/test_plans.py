@@ -147,9 +147,8 @@ def test_curation_python_stages_bounded_no_feature_self_joins(spark, sf_dir):
     assert "LeftAnti" in plan, plan
     # no INNER join is keyed on doc_id — the two r3 feature self-joins on
     # doc_id are gone; the dedup-internal joins key on band/bucket and
-    # i/j.  (doc_id-keyed LeftSemi joins are the r6 candidate-id
-    # restriction of the shingle verify, and the LeftAnti is the drop
-    # set — both intended.)
+    # i/j (the two verify joins look texts up by doc_id aliased to i and
+    # j).  The doc_id-keyed LeftAnti is the drop set — intended.
     blocks = re.split(r"\n\(\d+\) ", plan)
     inner_doc_joins = [
         b
@@ -167,6 +166,27 @@ def test_curation_python_stages_bounded_no_feature_self_joins(spark, sf_dir):
     from cqf_spark.operators.curation import curate_corpus
 
     assert "F.broadcast(dropped" not in inspect.getsource(curate_corpus)
+
+
+def test_minhash_verify_runs_no_shingle_explode(spark, sf_dir):
+    """MinHash-LSH verifies candidates on their texts in codegen: one
+    Python stage (the signatures), no Generate but the band posexplode,
+    and the signature frame as the only cached relation."""
+    import re
+
+    from cqf_spark.operators.dedup import minhash_dedup_pairs
+
+    plan = _plan(minhash_dedup_pairs(load(spark, sf_dir, "documents")), spark)
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+    generators = re.findall(
+        r"\(\d+\) Generate\nInput \[\d+\]: \[.*\]\nArguments: (\w+\(\w+\(\w+\(\w+\(\w+)",
+        plan,
+    )
+    assert generators, plan
+    assert set(generators) == {"posexplode(array(hash(slice(sig"}, plan
+    cached = re.findall(r"\(\d+\) InMemoryRelation\nArguments: \[(.*?)\]", plan)
+    assert cached, plan
+    assert all(re.fullmatch(r"doc_id#\d+L, sig#\d+", c) for c in cached), plan
 
 
 def test_kmeans_update_aggregates_map_side(spark, sf_dir):

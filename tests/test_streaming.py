@@ -169,3 +169,34 @@ def test_grouped_streaming_sketches_match_batch(spark, tmp_path):
         assert np.array_equal(kh_g, kh_w) and np.array_equal(c_g, c_w), g
         assert r["nelts"] == want[g].nelts
 
+
+
+def test_grouped_streaming_sketches_skip_null_keys(spark, tmp_path):
+    """A null key is not an element, and a long key past 2**53 in a
+    null-bearing batch must hash as itself: one group over
+    [2**60+1, None, 7] holds two elements and finds 2**60+1."""
+    from cqf_spark.core import Cqf
+    from cqf_spark.streaming import grouped_streaming_sketches
+
+    big = 2**60 + 1
+    src = str(tmp_path / "nsrc")
+    spark.createDataFrame(
+        [("a", big), ("a", None), ("a", 7)], "g string, k long"
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("g string, k long").parquet(src)
+    out = grouped_streaming_sketches(stream, "g", "k", CFG)
+    q = (
+        out.writeStream.format("memory")
+        .queryName("nullkeys")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "nckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+
+    (row,) = spark.sql("select * from nullkeys").collect()
+    assert row["group"] == "a"
+    assert row["nelts"] == 2
+    sk = Cqf.from_bytes(bytes(row["sketch"]))
+    assert sk.count(np.array([big], dtype=np.uint64))[0] >= 1
