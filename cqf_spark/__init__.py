@@ -1,6 +1,7 @@
 """cqf_spark — PySpark-native counting-quotient-filter library."""
 
 import os
+import sys
 
 # Large numpy buffers must come from reusable heap memory, not fresh mmaps:
 # glibc's default trim/mmap behavior returns big buffers to the kernel on
@@ -39,3 +40,29 @@ try:
     _libc.mallopt(-1, (1 << 31) - 1)  # M_TRIM_THRESHOLD
 except Exception:  # non-glibc platform: env vars alone must do
     pass
+
+# pyspark's worker calls importlib.invalidate_caches() at the start of every
+# task (worker_util.setup_spark_files), and before CPython 3.13 each
+# zipimporter answers by re-reading its whole archive directory.  Spark
+# itself puts the spark-core jar and pyspark.zip on the worker's path, so
+# no choice of how this library ships avoids it: a reused worker holds 17
+# zipimporters and paid 120-240 ms per task before its UDF ran.
+# Re-read only when the archive's (mtime, size) moved since this importer
+# last read it; a rewritten zip is still re-read, a new py-file is a new
+# path with its own importer.  3.13 made the re-read lazy.
+if sys.version_info < (3, 13):
+    import zipimport as _zipimport
+
+    _reread = _zipimport.zipimporter.invalidate_caches
+
+    def _invalidate_if_changed(self):
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            sig = None
+        if sig is None or sig != getattr(self, "_read_sig", None):
+            self._read_sig = sig
+            _reread(self)
+
+    _zipimport.zipimporter.invalidate_caches = _invalidate_if_changed

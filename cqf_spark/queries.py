@@ -332,10 +332,11 @@ def q_merge_union_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         a, b = fa.result(), fb.result()
     merged = a.merge(b)
-    # probe keys = union of the two sides' key sets — the same set the
-    # r5 plan paid a third full lineitem scan + distinct for
+    # probe keys = union of the two sides' key sets: every key of a row
+    # with a non-null side, read off the persisted frame (the r5 plan
+    # paid a third full lineitem scan + distinct for it)
     probes = (
-        lo.select("l_suppkey").union(hi.select("l_suppkey")).distinct()
+        sides.where(F.col("__lo").isNotNull()).select("l_suppkey").distinct()
     )
     return probes.select(
         "l_suppkey", count_udf(spark, merged)("l_suppkey").alias("approx_count")

@@ -37,7 +37,6 @@ from .aggregator import (
     ensure_parallelism,
     ensure_shipped,
     hash_arrow,
-    hash_series,
 )
 from .config import CqfConfig
 from .core import Cqf
@@ -462,33 +461,41 @@ class ShardedCqf:
         # holds a whole shard's probes (VERDICT r01).
         n_salt = max(int(spark.sparkContext.defaultParallelism) // max(self.n_shards, 1), 1)
 
-        def add_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                h = hash_series(pdf[key_col], config)
+        def add_shard(batches: Iterator[Any]) -> Iterator[Any]:
+            for rb in batches:
+                h = hash_arrow(rb.column(0), config)
                 if vb:
                     h = h << np.uint64(vb)
-                pdf = pdf[[key_col]].copy()
-                pdf["shard"] = (h >> np.uint64(shift)).astype(np.int64)
                 # salt from the bits ABOVE the value field: with
                 # value_bits > 0 the low vb bits of h are always zero, so
                 # h % n_salt would collapse every probe into salt 0 for
                 # any power-of-two n_salt <= 2^vb — exactly the skew the
-                # salt exists to prevent
-                pdf["salt"] = (
-                    (h >> np.uint64(vb)) % np.uint64(n_salt)
-                ).astype(np.int32)
-                # the full hash rides the shuffle as ONE extra long so the
-                # grouped task never re-hashes the key strings (VERDICT r4
-                # #5); int64 view is lossless, the probe side views it back
-                pdf["h"] = h.view(np.int64)
-                yield pdf
+                # salt exists to prevent.  The full hash rides the
+                # shuffle as ONE extra long so the grouped task never
+                # re-hashes the key strings (VERDICT r4 #5); the int64
+                # view is lossless, the probe side views it back.
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0),
+                        pa.array((h >> np.uint64(shift)).astype(np.int32)),
+                        pa.array(
+                            ((h >> np.uint64(vb)) % np.uint64(n_salt))
+                            .astype(np.int32)
+                        ),
+                        pa.array(h.view(np.int64)),
+                    ],
+                    names=[key_col, "shard", "salt", "h"],
+                )
 
-        keyed = probes.select(key_col).mapInPandas(
+        # null keys never reach pandas: a null-bearing long column arrives
+        # there as float64, which loses every key above 2^53.  They read
+        # 0 (the SQL-COUNT null semantics the oracles mirror) and rejoin
+        # the probed rows JVM-side.
+        key = F.col(key_col)
+        out_type = dict(probes.dtypes)[key_col]
+        keyed = probes.select(key_col).where(key.isNotNull()).mapInArrow(
             add_shard,
-            schema=(
-                f"{key_col} {dict(probes.dtypes)[key_col]}, "
-                "shard int, salt int, h long"
-            ),
+            schema=f"{key_col} {out_type}, shard int, salt int, h long",
         )
         # one blob row per (shard, salt) group — the cogroup's right side
         salts = spark.range(n_salt).select(
@@ -497,7 +504,6 @@ class ShardedCqf:
         blobs = self.df.select(
             F.col("shard").cast("int").alias("shard"), "sketch"
         ).crossJoin(salts)
-        out_type = dict(probes.dtypes)[key_col]
 
         def probe_cogroup(
             left: pd.DataFrame, right: pd.DataFrame
@@ -514,18 +520,19 @@ class ShardedCqf:
                 # shard reuse one decoded sketch
                 sk = _cached_sketch(bytes(right["sketch"].iloc[0]))
                 counts = sk.count_hashes(h & local_mask).astype(np.int64)
-            # null keys hash as ""/0: report 0, not key-0's count (the
-            # SQL-COUNT null semantics the oracles mirror)
-            counts[keys.isna().to_numpy()] = 0
             return pd.DataFrame({key_col: keys, "approx_count": counts})
 
-        return (
+        probed = (
             keyed.groupBy("shard", "salt")
             .cogroup(blobs.groupBy("shard", "salt"))
             .applyInPandas(
                 probe_cogroup,
                 schema=f"{key_col} {out_type}, approx_count long",
             )
+        )
+        nulls = probes.select(key_col).where(key.isNull())
+        return probed.unionByName(
+            nulls.withColumn("approx_count", F.lit(0).cast("long"))
         )
 
     def heavy_hitters_df(self, k: int) -> Any:

@@ -151,3 +151,20 @@ def test_sharded_count_udf_big_long_next_to_null(spark):
         sharded.df.unpersist()
     assert got[big] >= 1 and got[7] >= 1
     assert got[None] == 0
+
+
+def test_sharded_count_join_long_keys_beside_nulls(spark):
+    """A null in a probe batch must not turn the long key column into
+    float64: keys above 2^53 keep their low bits, hash to their own
+    shard, and the null probe reads 0."""
+    from cqf_spark.queries import INT_CONFIG
+
+    big = 2**60 + 1
+    build = spark.createDataFrame([(big,), (7,), (big,)], "k long")
+    sk = ShardedCqf.aggregate(build, "k", INT_CONFIG, n_shards=4)
+    try:
+        probes = spark.createDataFrame([(big,), (None,), (7,)], "k long")
+        got = {tuple(r) for r in sk.count_join(probes, "k").collect()}
+        assert got == {(big, 2), (7, 1), (None, 0)}
+    finally:
+        sk.df.unpersist()
